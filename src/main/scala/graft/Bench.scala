@@ -777,12 +777,11 @@ object Bench {
       // every run of a checkpoint-using query (q20/q38/q42/q58…) pins
       // fresh block-manager memory; across 64 queries × 6 runs the
       // accumulation degrades later queries (r02: q62 read 4.0 s in the
-      // full bench vs 0.56 s isolated). Unpersist what THIS query
-      // pinned once its runs finish; pre-existing memos stay.
-      val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      val cpu0 = readCpu()
-      val t =
-        try {
+      // full bench vs 0.56 s isolated). Release what THIS query pinned
+      // once its runs finish; pre-existing memos stay.
+      val t = Reuse.isolating(spark) {
+        val cpu0 = readCpu()
+        val t = try {
           // attribute native-path scan time and eagerly-materialized
           // sub-queries to the query about to run
           metrics.NativeScanTime.drain()
@@ -806,24 +805,9 @@ object Bench {
             System.err.println(s"[bench] ${e.name} failed: ${ex.getMessage}")
             -1.0
         }
-      for ((b0, s0, t0) <- cpu0; (b1, s1, t1) <- readCpu() if t1 > t0)
-        stealByQuery(e.name) = (s1 - s0).toDouble / (t1 - t0).toDouble
-      // index memos FIRST, via their own invalidation (Dataset.unpersist
-      // + memo removal): a raw RDD-level unpersist would free the blocks
-      // but leave the memo claiming a materialized index that silently
-      // recomputes per search. Each index-using query rebuilds in its
-      // own warmup, so cost attribution stays honest.
-      // BLOCKING unpersists everywhere in this sweep: an async
-      // unpersist returns immediately and the block-deletion IO lands
-      // inside the NEXT query's timed runs (the r5 witness pass showed
-      // text-heavy queries at 2-3x their isolated times in-sequence —
-      // deletion overlap is the controllable part of that gap). The
-      // sweep runs outside every timed region, so waiting here is free.
-      operators.Ivf.invalidateIndex(blocking = true)
-      operators.Pq.invalidateIndex(blocking = true)
-      TransientCaches.release(blocking = true)
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!pinnedBefore.contains(id)) rdd.unpersist(blocking = true)
+        for ((b0, s0, t0) <- cpu0; (b1, s1, t1) <- readCpu() if t1 > t0)
+          stealByQuery(e.name) = (s1 - s0).toDouble / (t1 - t0).toDouble
+        t
       }
       // streaming runs use a fresh checkpoint each time (re-runs must
       // re-pay the ingest), so each leaves a dead provider set (32

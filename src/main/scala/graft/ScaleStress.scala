@@ -344,8 +344,7 @@ object ScaleStress {
 
     def timed(e: QueryEntry, dir: String, runs: Int): Double = {
       System.gc()
-      val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      val t =
+      val t = Reuse.isolating(spark) {
         try {
           e.run(spark, dir) // warmup (also stages derived copies)
           // streaming entries: ONE extra warmup stream — the
@@ -373,11 +372,6 @@ object ScaleStress {
             System.err.println(s"[scale] ${e.name} failed at $dir: ${ex.getMessage}")
             -1.0
         }
-      operators.Ivf.invalidateIndex(blocking = true)
-      operators.Pq.invalidateIndex(blocking = true)
-      TransientCaches.release(blocking = true)
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!pinnedBefore.contains(id)) rdd.unpersist(blocking = true)
       }
       // dead state-store providers from fresh-checkpoint streaming
       // re-runs accumulate until the lazy maintenance cycle; unload

@@ -31,7 +31,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     *
     * The fan-out is SIZE-derived (guide §2.2), not the raw session
     * parallelism: ~32 KiB of source parquet per task
-    * (`SPARK_GRAFT_REBALANCE_TARGET_BYTES`), capped at the session's
+    * ([[Tables.RebalanceTargetBytes]]), capped at the session's
     * shuffle partitions. A KB-scale fixture spread 32 ways measured
     * SLOWER than 8 ways at the same 32 cores (r14 scaling block, r15
     * q19 profile: the same md5+regex stage reported ~12 s of task CPU
@@ -43,10 +43,8 @@ final case class Tables(spark: SparkSession, dir: String) {
     */
   def documentsRebalanced: DataFrame = {
     val p = spark.sessionState.conf.numShufflePartitions
-    val target = sys.env.getOrElse(
-      "SPARK_GRAFT_REBALANCE_TARGET_BYTES", "32768").toLong
     val bytes = documents.queryExecution.optimizedPlan.stats.sizeInBytes
-    val n = (bytes / target).min(BigInt(p)).max(BigInt(1)).toInt
+    val n = (bytes / Tables.RebalanceTargetBytes).min(BigInt(p)).max(BigInt(1)).toInt
     documents.repartition(n, org.apache.spark.sql.functions.col("doc_id"))
   }
   def embeddings: DataFrame = t("embeddings")
@@ -103,29 +101,15 @@ object Tables {
     case _        => org.apache.spark.sql.functions.unix_micros(eventsTs(dt))
   }
 
-  /** Memoized source frames per (session, dir, table). `spark.read
-    * .parquet` pays file listing + footer schema inference on every
-    * call — a fixed per-query tax that dominated small benchmark
-    * queries (≈0.15 s × 46 queries in round 1). A DataFrame is an
-    * immutable plan over the listing snapshot, so reuse within a
-    * session is sound; if fixture files are rewritten mid-session call
-    * [[invalidate]] (the `REFRESH TABLE` contract, same as
-    * `Ivf.invalidateIndex`). Stopped sessions are evicted on the next
-    * load — weak keys would not work here because every cached
-    * DataFrame strongly references its own session (the classic
-    * WeakHashMap value→key pitfall).
+  /** Source parquet bytes per task in [[Tables.documentsRebalanced]]. */
+  val RebalanceTargetBytes = 32768L
+
+  /** Source frame per (session, dir, table). `spark.read.parquet` pays
+    * file listing + footer schema inference on every call — a fixed
+    * per-query tax that dominated small benchmark queries (≈0.15 s × 46
+    * queries in round 1). A DataFrame is an immutable plan over the
+    * listing snapshot, so reuse within a session is sound.
     */
-  private val cache = scala.collection.mutable.HashMap.empty[
-    SparkSession, scala.collection.concurrent.TrieMap[(String, String), DataFrame]]
-
-  def invalidate(): Unit = cache.synchronized(cache.clear())
-
-  private[graft] def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val per = cache.synchronized {
-      cache.filterInPlace((s, _) => !s.sparkContext.isStopped)
-      cache.getOrElseUpdate(spark,
-        scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-    }
-    per.getOrElseUpdate((dir, name), spark.read.parquet(s"$dir/$name.parquet"))
-  }
+  private[graft] def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    Reuse.memo(spark, ("tables", dir, name))(spark.read.parquet(s"$dir/$name.parquet"))
 }

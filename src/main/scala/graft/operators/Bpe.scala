@@ -83,31 +83,27 @@ object Bpe {
   def bpeCoverage(tokens: DataFrame, numMerges: Int): DataFrame = {
     val spark = tokens.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    val pinnedBefore = sc.getPersistentRDDs.keySet
-    val fin = bpeLoop(tokens, numMerges)._2
-    val r = fin.agg(
-      count(lit(1)).as("terms"),
-      sum(col("freq")).as("occ"),
-      sum(col("freq") * length(col("term")).cast("long")).as("chars"),
-      sum(col("freq") * size(syms(col("s"))).cast("long")).as("symsTot"),
-      sum(when(size(syms(col("s"))) <= 2, col("freq")).otherwise(0L))
-        .as("merged")).head()
-    val (terms, occ, chars, symsTot, merged) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-    val out = Seq((terms, occ, chars, symsTot,
-      symsTot * 1000000L / occ, merged * 1000000L / occ))
-      .toDF("n_terms", "n_occurrences", "total_chars", "total_symbols",
-        "syms_per_occ_ppm", "fully_merged_ppm")
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinnedBefore.contains(id)) rdd.unpersist(blocking = false)
+    graft.Reuse.releasingNew(spark) {
+      val fin = bpeLoop(tokens, numMerges)._2
+      val r = fin.agg(
+        count(lit(1)).as("terms"),
+        sum(col("freq")).as("occ"),
+        sum(col("freq") * length(col("term")).cast("long")).as("chars"),
+        sum(col("freq") * size(syms(col("s"))).cast("long")).as("symsTot"),
+        sum(when(size(syms(col("s"))) <= 2, col("freq")).otherwise(0L))
+          .as("merged")).head()
+      val (terms, occ, chars, symsTot, merged) =
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
+      Seq((terms, occ, chars, symsTot,
+        symsTot * 1000000L / occ, merged * 1000000L / occ))
+        .toDF("n_terms", "n_occurrences", "total_chars", "total_symbols",
+          "syms_per_occ_ppm", "fully_merged_ppm")
     }
-    out
   }
 
   /** The induction loop: per-round (rank, a, b, count, total_symbols)
     * plus the final rewritten vocab frame (still persisted — callers
-    * release it via the snapshot-diff cleanup).
+    * release it via Reuse.releasingNew).
     */
   private def bpeLoop(tokens: DataFrame, numMerges: Int)
       : (Seq[(Int, String, String, Long, Long)], DataFrame) = {
@@ -148,17 +144,12 @@ object Bpe {
   def bpeMerges(tokens: DataFrame, numMerges: Int): DataFrame = {
     val spark = tokens.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    val pinnedBefore = sc.getPersistentRDDs.keySet
-    val (learned, _) = bpeLoop(tokens, numMerges)
-    val result = learned
-      .toDF("rank", "sym_a", "sym_b", "pair_count", "total_symbols")
-      .orderBy("rank")
     // driver-built output: free every block this call pinned
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinnedBefore.contains(id)) rdd.unpersist(blocking = false)
+    graft.Reuse.releasingNew(spark) {
+      bpeLoop(tokens, numMerges)._1
+        .toDF("rank", "sym_a", "sym_b", "pair_count", "total_symbols")
+        .orderBy("rank")
     }
-    result
   }
 
   /** The full induction, unrolled: level r = pair counts over v(r−1),

@@ -74,49 +74,18 @@ object Ivf {
 
   /** Fitted-quantizer memo: an IVF index is built once and queried
     * many times; refitting per query would misrepresent the operator's
-    * cost. Keyed by the logical plan's semantic hash, which includes
-    * the resolved file listing — so a FRESH `spark.read` after a
-    * same-path rewrite misses the memo and refits automatically
-    * (spec-asserted in IvfSpec). The stale hazard is holding the SAME
-    * DataFrame across a rewrite (unchanged plan → unchanged hash):
-    * Spark's CacheManager re-caches the persisted inverted lists on a
-    * same-session overwrite, but THIS memo keeps serving the
-    * quantizer fitted on the old data — call [[invalidateIndex]] and
-    * re-read, the engine's `REFRESH TABLE` analogue. Bounded to 64
-    * fitted models.
+    * cost. Keyed by the logical plan's semantic hash, which covers the
+    * read's root paths but NOT its file listing: after a same-path
+    * rewrite, a held DataFrame and a fresh `spark.read` alike hash as
+    * before. Spark's CacheManager re-caches the persisted inverted
+    * lists on a same-session overwrite, but THIS memo keeps serving the
+    * quantizer fitted on the old data — call [[graft.Reuse.invalidate]]
+    * and re-read, the engine's `REFRESH TABLE` analogue.
     */
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), IndexedSeq[Array[Float]]]
-
-  /** The inverted lists themselves — the clustered corpus,
-    * materialized once per (session, plan, model): this IS the IVF
-    * index, and re-assigning every vector on every search would
-    * misrepresent the operator's query-time cost exactly like
-    * refitting would. Keyed by SESSION too (unlike the quantizer memo,
-    * whose values are plain arrays): a cached DataFrame is bound to
-    * the session that persisted it, and plan hashes collide across
-    * sessions. Entries of stopped sessions are evicted on access.
-    */
-  private val listsCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int, Int), DataFrame]
-
-  def invalidateIndex(blocking: Boolean = false): Unit = {
-    centroidCache.clear()
-    listsCache.values.foreach(df =>
-      try df.unpersist(blocking) catch { case _: Throwable => () })
-    listsCache.clear()
-    // staged-index in-JVM memos too (the staged FILES stay — they are
-    // the index; fingerprint-keyed paths make them stale-proof)
-    stagedCentroidCache.clear()
-  }
-
-  def fittedCentroids(emb: DataFrame, k: Int, iters: Int): IndexedSeq[Array[Float]] = {
-    val key = (emb.queryExecution.analyzed.semanticHash().toString, k, iters)
-    // bound the memo by evicting strangers, never the key being served
-    if (centroidCache.size > 64)
-      centroidCache.keys.find(_ != key).foreach(centroidCache.remove)
-    centroidCache.getOrElseUpdate(key, fitCentroids(emb, k, iters))
-  }
+  def fittedCentroids(emb: DataFrame, k: Int, iters: Int): IndexedSeq[Array[Float]] =
+    graft.Reuse.memo(emb.sparkSession,
+      ("ivf.centroids", emb.queryExecution.analyzed.semanticHash(), k, iters),
+      graft.Reuse.Index)(fitCentroids(emb, k, iters))
 
   /** (q_id, q_vec, pc = top-nprobe cluster ids) per probe — shared by
     * plain IVF (q33) and IVF-PQ (q74) search.
@@ -166,31 +135,24 @@ object Ivf {
   def annSearch(emb: DataFrame, probes: DataFrame, nprobe: Int, k: Int,
       nClusters: Int = 16, iters: Int = 3): DataFrame = {
     val cents = fittedCentroids(emb, nClusters, iters)
-    val key = (emb.sparkSession,
-      emb.queryExecution.analyzed.semanticHash().toString, nClusters, iters)
-    def drop(k: (org.apache.spark.sql.SparkSession, String, Int, Int)): Unit =
-      listsCache.remove(k).foreach(df =>
-        try df.unpersist() catch { case _: Throwable => () })
-    listsCache.keys.filter(_._1.sparkContext.isStopped).foreach(drop)
-    // bound, don't flush: evict ONE stranger past the cap (the
-    // centroidCache policy)
-    if (listsCache.size > 64) listsCache.keys.find(_ != key).foreach(drop)
-    // build under a lock — TrieMap.getOrElseUpdate may run the builder
-    // twice concurrently, and the loser would stay persisted forever
-    val corpus = listsCache.get(key).getOrElse(listsCache.synchronized {
-      listsCache.get(key).getOrElse {
-        val c = withCluster(emb, cents)
-          .select(col("vec_id"), col("embedding"), col("cluster"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        c.count() // materialize the index eagerly
-        listsCache.put(key, c)
-        c
-      }
-    })
+    // the inverted lists themselves — the clustered corpus,
+    // materialized once per (session, plan, model): this IS the IVF
+    // index, and re-assigning every vector on every search would
+    // misrepresent the operator's query-time cost exactly like
+    // refitting would
+    val corpus = graft.Reuse.memo(emb.sparkSession,
+        ("ivf.lists", emb.queryExecution.analyzed.semanticHash(), nClusters, iters),
+        graft.Reuse.Index) {
+      val c = withCluster(emb, cents)
+        .select(col("vec_id"), col("embedding"), col("cluster"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      c.count() // materialize the index eagerly
+      c
+    }
     // NOTE an external RDD-level unpersist of the materialized blocks is
     // NOT detectable here (Dataset.storageLevel reports the requested
     // level, not live block state) — callers that free pinned storage
-    // behind the engine's back must call invalidateIndex() so the memo
+    // behind the engine's back must call Reuse.invalidate() so the memo
     // is rebuilt instead of silently recomputing per search. The bench
     // loop does exactly that between queries.
     searchLists(corpus, cents, probes, nprobe, k)
@@ -217,12 +179,6 @@ object Ivf {
     Staging.fingerprintPath("graft_ivf", dir, "embeddings.parquet",
       s"lists_${nClusters}_$iters")
 
-  /** Reloaded staged-centroid arrays, memoized per staged path (the
-    * path carries the fixture fingerprint, so the memo can't go stale).
-    */
-  private val stagedCentroidCache =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[Array[Float]]]
-
   /** Fit-once-load-forever quantizer: the k×dim model as a k-row
     * parquet file. A JVM that finds the file reads k rows; only the
     * first JVM ever to see this fixture pays the fit.
@@ -231,7 +187,9 @@ object Ivf {
       nClusters: Int = 16, iters: Int = 3): IndexedSeq[Array[Float]] = {
     import spark.implicits._
     val dest = stagedCentroidsPath(dir, nClusters, iters)
-    stagedCentroidCache.getOrElseUpdate(dest, {
+    // reloaded arrays memoized per staged path (the path carries the
+    // fixture fingerprint, so the memo can't go stale)
+    graft.Reuse.memo(spark, ("ivf.stagedCentroids", dest), graft.Reuse.Index) {
       Staging.ensureStaged(dest) {
         val cents = fitCentroids(Tables(spark, dir).embeddings, nClusters, iters)
         cents.indices.map(i => (i, cents(i)))
@@ -242,7 +200,7 @@ object Ivf {
       spark.read.parquet(dest)
         .orderBy("cluster_id")
         .select("centroid").as[Array[Float]].collect().toIndexedSeq
-    })
+    }
   }
 
   /** The durable inverted lists: the corpus clustered under the staged

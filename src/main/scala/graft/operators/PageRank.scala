@@ -373,62 +373,57 @@ object PageRank {
     val MemOnly = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
     // The report is a driver-built |ks|-row frame with NO lineage on
     // the loop's checkpointed intermediates, so every block this call
-    // pins is freed before returning (snapshot-diff of persistent
-    // RDDs, the ScaleStress idiom) — without this, repeated bench runs
-    // accumulate per-round checkpoint RDDs until a 128 GiB heap
-    // finally GCs, and the pile-up inflated the first x10 reading 3x
-    // over its lone-JVM cost.
-    val sc = spark.sparkContext
-    val pinnedBefore = sc.getPersistentRDDs.keySet
-    // Two exact shortcuts vs the oracle's full 10-level unroll (both
-    // legal because the k-core is UNIQUE): (1) early exit — each round
-    // only removes edges, so an unchanged edge COUNT means an
-    // unchanged edge SET and every later peel level is a no-op;
-    // (2) ascending-k seeding — the k-core of G equals the k-core of
-    // any k′-core for k′ ≤ k, so k=3 peels the (much smaller)
-    // converged 2-core, not the raw pair frame.
-    var seed = edges0.localCheckpoint(true, MemOnly)
-    var seedEdges = seed.count()
-    val out = ks.sorted.map { k =>
-      var edges = seed
-      var nNodes = 0L
-      var nEdges = seedEdges
-      var converged = false
-      var r = 1
-      while (r <= maxRounds && !converged) {
-        val surv = graft.TransientCaches.register(
-          edges.select(col("doc_a").as("v"))
-            .union(edges.select(col("doc_b").as("v")))
-            .groupBy("v").agg(count(lit(1)).as("d"))
-            .filter(col("d") >= k).select("v")
-            .persist(MemOnly))
-        val next = edges.join(surv.select(col("v").as("doc_a")), "doc_a")
-          .join(surv.select(col("v").as("doc_b")), "doc_b")
-          .select("doc_a", "doc_b")
-          .localCheckpoint(true, MemOnly)
-        val t0 = System.nanoTime()
-        val ne = next.count()
-        if (ne == nEdges) { converged = true; nNodes = surv.count() }
-        if (sys.env.contains("SPARK_GRAFT_KCORE_DEBUG"))
-          println(f"kcore k=$k round=$r ne=$ne ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        nEdges = ne
-        surv.unpersist()
-        edges = next // prior round's checkpointed RDD becomes
-        // unreachable here; the ContextCleaner reclaims its blocks
-        r += 1
+    // pins is freed before returning (Reuse.releasingNew) — without
+    // this, repeated bench runs accumulate per-round checkpoint RDDs
+    // until a 128 GiB heap finally GCs, and the pile-up inflated the
+    // first x10 reading 3x over its lone-JVM cost.
+    graft.Reuse.releasingNew(spark) {
+      // Two exact shortcuts vs the oracle's full 10-level unroll (both
+      // legal because the k-core is UNIQUE): (1) early exit — each round
+      // only removes edges, so an unchanged edge COUNT means an
+      // unchanged edge SET and every later peel level is a no-op;
+      // (2) ascending-k seeding — the k-core of G equals the k-core of
+      // any k′-core for k′ ≤ k, so k=3 peels the (much smaller)
+      // converged 2-core, not the raw pair frame.
+      var seed = edges0.localCheckpoint(true, MemOnly)
+      var seedEdges = seed.count()
+      val out = ks.sorted.map { k =>
+        var edges = seed
+        var nNodes = 0L
+        var nEdges = seedEdges
+        var converged = false
+        var r = 1
+        while (r <= maxRounds && !converged) {
+          val surv = graft.TransientCaches.register(
+            edges.select(col("doc_a").as("v"))
+              .union(edges.select(col("doc_b").as("v")))
+              .groupBy("v").agg(count(lit(1)).as("d"))
+              .filter(col("d") >= k).select("v")
+              .persist(MemOnly))
+          val next = edges.join(surv.select(col("v").as("doc_a")), "doc_a")
+            .join(surv.select(col("v").as("doc_b")), "doc_b")
+            .select("doc_a", "doc_b")
+            .localCheckpoint(true, MemOnly)
+          val t0 = System.nanoTime()
+          val ne = next.count()
+          if (ne == nEdges) { converged = true; nNodes = surv.count() }
+          if (sys.env.contains("SPARK_GRAFT_KCORE_DEBUG"))
+            println(f"kcore k=$k round=$r ne=$ne ${(System.nanoTime() - t0) / 1e9}%.2fs")
+          nEdges = ne
+          surv.unpersist()
+          edges = next // prior round's checkpointed RDD becomes
+          // unreachable here; the ContextCleaner reclaims its blocks
+          r += 1
+        }
+        require(converged,
+          s"k-core(k=$k) did not converge within $maxRounds peel rounds — " +
+            "raise the round count in BOTH the engine and the oracle")
+        seed = edges
+        seedEdges = nEdges
+        (k, nNodes, nEdges)
       }
-      require(converged,
-        s"k-core(k=$k) did not converge within $maxRounds peel rounds — " +
-          "raise the round count in BOTH the engine and the oracle")
-      seed = edges
-      seedEdges = nEdges
-      (k, nNodes, nEdges)
+      out.toDF("k", "n_core_nodes", "n_core_edges")
     }
-    val result = out.toDF("k", "n_core_nodes", "n_core_edges")
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinnedBefore.contains(id)) rdd.unpersist(blocking = false)
-    }
-    result
   }
 
   val LpaIters = 3

@@ -97,14 +97,10 @@ object Pq {
   /** Fitted-codebook memo (the q33 policy: an index is built once and
     * queried many times; see [[Ivf.fittedCentroids]]).
     */
-  private val bookCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), IndexedSeq[IndexedSeq[Array[Double]]]]
-
-  def fittedCodebooks(emb: DataFrame, iters: Int = 3): IndexedSeq[IndexedSeq[Array[Double]]] = {
-    val key = (emb.queryExecution.analyzed.semanticHash().toString, iters)
-    if (bookCache.size > 64) bookCache.keys.find(_ != key).foreach(bookCache.remove)
-    bookCache.getOrElseUpdate(key, fitCodebooks(emb, iters))
-  }
+  def fittedCodebooks(emb: DataFrame, iters: Int = 3): IndexedSeq[IndexedSeq[Array[Double]]] =
+    graft.Reuse.memo(emb.sparkSession,
+      ("pq.books", emb.queryExecution.analyzed.semanticHash(), iters),
+      graft.Reuse.Index)(fitCodebooks(emb, iters))
 
   /** PQ-encode: (vec_id, cluster, codes array<int>) — the 4-byte-per-
     * vector index payload, coarse cluster included for IVF pruning.
@@ -118,43 +114,23 @@ object Pq {
           .as("codes"))
 
   /** The encoded corpus IS the PQ index — materialized once per
-    * (session, plan, model) and searched many times, the
-    * `Ivf.listsCache` policy (re-encoding on every search would
-    * misrepresent the operator's query-time cost).
+    * (session, plan, model) and searched many times, the IVF
+    * inverted-lists policy (re-encoding on every search would
+    * misrepresent the operator's query-time cost). See the note in
+    * Ivf.annSearch: external RDD-level unpersists are undetectable
+    * here; callers freeing pinned storage must call Reuse.invalidate()
+    * (the bench loop does, between queries).
     */
-  private val encCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int), DataFrame]
-
-  def invalidateIndex(blocking: Boolean = false): Unit = {
-    bookCache.clear()
-    encCache.values.foreach(df =>
-      try df.unpersist(blocking) catch { case _: Throwable => () })
-    encCache.clear()
-    stagedBookCache.clear()
-  }
-
   private def encodedCached(emb: DataFrame, coarse: IndexedSeq[Array[Float]],
-      books: IndexedSeq[IndexedSeq[Array[Double]]], iters: Int): DataFrame = {
-    val key = (emb.sparkSession,
-      emb.queryExecution.analyzed.semanticHash().toString, iters)
-    def drop(k: (org.apache.spark.sql.SparkSession, String, Int)): Unit =
-      encCache.remove(k).foreach(df =>
-        try df.unpersist() catch { case _: Throwable => () })
-    encCache.keys.filter(_._1.sparkContext.isStopped).foreach(drop)
-    if (encCache.size > 64) encCache.keys.find(_ != key).foreach(drop)
-    // see the invalidateIndex note in Ivf.annSearch: external RDD-level
-    // unpersists are undetectable here; callers freeing pinned storage
-    // must invalidate the memo (the bench loop does, between queries)
-    encCache.get(key).getOrElse(encCache.synchronized {
-      encCache.get(key).getOrElse {
-        val built = encoded(emb, coarse, books)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        built.count()
-        encCache.put(key, built)
-        built
-      }
-    })
-  }
+      books: IndexedSeq[IndexedSeq[Array[Double]]], iters: Int): DataFrame =
+    graft.Reuse.memo(emb.sparkSession,
+        ("pq.encoded", emb.queryExecution.analyzed.semanticHash(), iters),
+        graft.Reuse.Index) {
+      val built = encoded(emb, coarse, books)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      built.count()
+      built
+    }
 
   /** The shared ADC query plan over an encoded corpus (vec_id, cluster,
     * codes) — memo-backed ([[annSearchPq]]) or parquet-backed
@@ -223,15 +199,12 @@ object Pq {
     graft.sources.Staging.fingerprintPath("graft_pq", dir, "embeddings.parquet",
       s"enc_${M}_${K}_$iters")
 
-  private val stagedBookCache = scala.collection.concurrent.TrieMap
-    .empty[String, IndexedSeq[IndexedSeq[Array[Double]]]]
-
   /** Fit-once-load-forever codebooks: M×K rows of (m, code, cents). */
   def stagedCodebooks(spark: org.apache.spark.sql.SparkSession, dir: String,
       iters: Int = 3): IndexedSeq[IndexedSeq[Array[Double]]] = {
     import spark.implicits._
     val dest = stagedBooksPath(dir, iters)
-    stagedBookCache.getOrElseUpdate(dest, {
+    graft.Reuse.memo(spark, ("pq.stagedBooks", dest), graft.Reuse.Index) {
       graft.sources.Staging.ensureStaged(dest) {
         val books = fitCodebooks(Tables(spark, dir).embeddings, iters)
         (for (m <- 0 until M; c <- 0 until K) yield (m, c, books(m)(c)))
@@ -243,7 +216,7 @@ object Pq {
         .select("m", "code", "cents").as[(Int, Int, Array[Double])].collect()
         .map { case (m, c, cents) => (m, c) -> cents }.toMap
       (0 until M).map(m => (0 until K).map(c => rows((m, c))))
-    })
+    }
   }
 
   /** The durable PQ payload: (vec_id, cluster, codes) parquet — 4 bytes

@@ -34,25 +34,14 @@ object OrcRoundTrip {
     memoRead(spark, dest)(spark.read.orc(dest))
   }
 
-  /** Memoized staged frames per (session, staged path): the path
-    * embeds the source fingerprint, so reuse is staleness-safe; avoids
-    * re-listing + schema inference on every benchmark run (the
-    * `Tables.load` rationale applied to staged copies; stopped
-    * sessions are evicted on the next call — cached frames reference
-    * their session, so weak keys could never clear).
+  /** Staged frame per (session, staged path): the path embeds the
+    * source fingerprint, so reuse is staleness-safe; avoids re-listing
+    * + schema inference on every benchmark run (the `Tables.load`
+    * rationale applied to staged copies).
     */
-  private val stagedFrames = scala.collection.mutable.HashMap.empty[
-    SparkSession, scala.collection.concurrent.TrieMap[String, DataFrame]]
-
   private[sources] def memoRead(spark: SparkSession, dest: String)(
-      read: => DataFrame): DataFrame = {
-    val per = stagedFrames.synchronized {
-      stagedFrames.filterInPlace((s, _) => !s.sparkContext.isStopped)
-      stagedFrames.getOrElseUpdate(spark,
-        scala.collection.concurrent.TrieMap.empty[String, DataFrame])
-    }
-    per.getOrElseUpdate(dest, read)
-  }
+      read: => DataFrame): DataFrame =
+    graft.Reuse.memo(spark, ("staged", dest))(read)
 
   /** JSON-Lines copy of a fixture table — staged once per source
     * fingerprint; read back with the parquet source's schema so the

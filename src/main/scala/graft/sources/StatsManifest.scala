@@ -49,17 +49,14 @@ object StatsManifest {
     dest
   }
 
-  /** (file, lo, hi) per data file under `staged` — memoized per staged
-    * path; model-sized (row count = file count). Bounds are carried as
-    * `yyyy-MM-dd HH:mm:ss` strings (lexicographic order ≡ time order
+  /** (file, lo, hi) per data file under `staged` — memoized per
+    * (session, staged path); model-sized (row count = file count).
+    * Bounds are carried as `yyyy-MM-dd HH:mm:ss` strings (lexicographic order ≡ time order
     * in that format), sidestepping the external type of TIMESTAMP_NTZ
     * (the fixture's parquet `timestamp[ms]` with no UTC adjustment).
     */
-  private val manifests =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(String, String, String)]]()
-
   def manifest(spark: SparkSession, staged: String): Array[(String, String, String)] =
-    manifests.computeIfAbsent(staged, { _ =>
+    graft.Reuse.memo(spark, ("manifest", staged)) {
       spark.read.parquet(staged)
         .groupBy(input_file_name().as("file"))
         .agg(
@@ -68,7 +65,7 @@ object StatsManifest {
         // model-sized: ≤n_files rows — one (lo, hi) bound per data file
         .collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2)))
-    })
+    }
 
   /** The staged files whose [lo, hi] bounds intersect [from, to). */
   def prunedFiles(spark: SparkSession, staged: String,

@@ -75,31 +75,7 @@ object StreamingDocs {
     lastProgress.put(tag,
       s"batches=$batches input_rows=$rows" +
         stateRows.map(r => s" state_rows_total=$r").getOrElse(""))
-    import scala.jdk.CollectionConverters._
-    lastDetail.put(tag, ps.map { p =>
-      val st = Option(p.stateOperators).toSeq.flatten.headOption
-      s"[b${p.batchId} " +
-        p.durationMs.asScala.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"$k=$v" }.mkString(",") +
-        st.map(s => s" commitMs=${s.commitTimeMs}" +
-          s" updMs=${s.allUpdatesTimeMs} remMs=${s.allRemovalsTimeMs}" +
-          s" rows=${s.numRowsTotal}" +
-          Option(s.customMetrics).map(_.asScala.toSeq
-            .filter { case (k, v) =>
-              v > 500 && (k.contains("Latency") || k.contains("TimeMs") ||
-                k.contains("commit"))
-            }
-            .sortBy(-_._2).take(6)
-            .map { case (k, v) => s"$k=$v" }.mkString(" cm{", ",", "}"))
-            .getOrElse("")).getOrElse("") + "]"
-    }.mkString(" "))
   }
-
-  /** Per-batch duration/state-metric detail of the last run (probe
-    * diagnostics only — not a gate artifact).
-    */
-  val lastDetail =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   def runDecontaminateToCompletion(spark: SparkSession, dir: String): DataFrame = {
     // unique sink name per invocation: this helper is an ORACLED entry

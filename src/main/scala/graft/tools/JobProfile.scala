@@ -53,44 +53,36 @@ object JobProfile {
 
     val e = graft.SparkEntry.allEntries.find(_.name == name).get
     (1 to reps).foreach { i =>
-      jobStart.clear(); jobEnd.clear(); jobStages.clear(); jobDesc.clear(); stages.clear()
-      if (graft.Bench.isStreaming(name))
-        org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
-      val t0 = System.nanoTime()
-      e.run(spark, dir).write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(400) // let the listener bus drain (no public waitUntilEmpty)
-      println(f"== $name rep$i wall=$wall%.3f s, jobs=${jobStart.size}")
-      var covered = 0L
-      jobStart.keys.toSeq.sorted.foreach { j =>
-        val dur = jobEnd.getOrElse(j, 0L) - jobStart(j)
-        covered += dur
-        val st = jobStages.getOrElse(j, Seq.empty)
-        val tk = st.flatMap(stages.get).map(_.tasks).sum
-        println(f"  job $j%3d ${dur}%5d ms tasks=$tk%4d  ${jobDesc(j).take(60)}")
-      }
-      println(f"  sum(job walls)=${covered}ms  gap=${wall * 1000 - covered}%.0f ms (driver/planning)")
-      if (i == reps) {
-        println("  -- stages (by executorRunTime):")
-        stages.toSeq.sortBy(-_._2.runMs).take(14).foreach { case (id, r) =>
-          println(f"  stage $id%3d run=${r.runMs}%6d ms tasks=${r.tasks}%4d " +
-            f"in=${r.inputB / 1024}%6d KiB sr=${r.shufReadB / 1024}%5d KiB " +
-            f"sw=${r.shufWriteB / 1024}%5d KiB  ${r.name.take(50)}")
+      // Bench.measure's hygiene, then the dead streaming providers
+      graft.Reuse.isolating(spark) {
+        jobStart.clear(); jobEnd.clear(); jobStages.clear(); jobDesc.clear(); stages.clear()
+        if (graft.Bench.isStreaming(name))
+          org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
+        val t0 = System.nanoTime()
+        e.run(spark, dir).write.format("noop").mode("overwrite").save()
+        val wall = (System.nanoTime() - t0) / 1e9
+        Thread.sleep(400) // let the listener bus drain (no public waitUntilEmpty)
+        println(f"== $name rep$i wall=$wall%.3f s, jobs=${jobStart.size}")
+        var covered = 0L
+        jobStart.keys.toSeq.sorted.foreach { j =>
+          val dur = jobEnd.getOrElse(j, 0L) - jobStart(j)
+          covered += dur
+          val st = jobStages.getOrElse(j, Seq.empty)
+          val tk = st.flatMap(stages.get).map(_.tasks).sum
+          println(f"  job $j%3d ${dur}%5d ms tasks=$tk%4d  ${jobDesc(j).take(60)}")
+        }
+        println(f"  sum(job walls)=${covered}ms  gap=${wall * 1000 - covered}%.0f ms (driver/planning)")
+        if (i == reps) {
+          println("  -- stages (by executorRunTime):")
+          stages.toSeq.sortBy(-_._2.runMs).take(14).foreach { case (id, r) =>
+            println(f"  stage $id%3d run=${r.runMs}%6d ms tasks=${r.tasks}%4d " +
+              f"in=${r.inputB / 1024}%6d KiB sr=${r.shufReadB / 1024}%5d KiB " +
+              f"sw=${r.shufWriteB / 1024}%5d KiB  ${r.name.take(50)}")
+          }
         }
       }
-      operators.cleanupAfter(spark)
-    }
-    spark.stop()
-  }
-
-  /** Shared post-query cleanup mirroring Bench.measure's hygiene. */
-  private object operators {
-    def cleanupAfter(spark: org.apache.spark.sql.SparkSession): Unit = {
-      graft.operators.Ivf.invalidateIndex(blocking = true)
-      graft.operators.Pq.invalidateIndex(blocking = true)
-      graft.TransientCaches.release(blocking = true)
-      spark.sparkContext.getPersistentRDDs.foreach(_._2.unpersist(true))
       org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
     }
+    spark.stop()
   }
 }

@@ -57,7 +57,6 @@ object CharBigramCounts {
     val n = bytes.length
     val m = new java.util.LinkedHashMap[UTF8String, Long]()
     var prevStart = 0
-    var prevLen = 0
     var i = 0
     while (i < n) {
       val charLen = UTF8String.numBytesForFirstByte(bytes(i))
@@ -69,7 +68,6 @@ object CharBigramCounts {
         m.put(bg, if (prev == null) 1L else prev + 1L)
       }
       prevStart = i
-      prevLen = end - i
       i = end
     }
     val keys = new Array[AnyRef](m.size)

@@ -55,7 +55,7 @@ class IvfSpec extends SparkSpec {
     // therefore misses the memo and refits from the new files
     // automatically. The stale hazard is holding the SAME DataFrame
     // across a rewrite — its plan (and hash) is unchanged, so the memo
-    // keeps serving the materialized index; invalidateIndex() is the
+    // keeps serving the materialized index; Reuse.invalidate() is the
     // REFRESH TABLE analogue that resets it.
     val p = s"${sys.props("java.io.tmpdir")}/graft_ivf_fresh_spec"
     def write(vs: Seq[(Long, Array[Float])]): Unit =
@@ -65,7 +65,7 @@ class IvfSpec extends SparkSpec {
     def top1(emb: org.apache.spark.sql.DataFrame): Long =
       Ivf.annSearch(emb, probes, nprobe = 2, k = 1, nClusters = 2, iters = 1)
         .select("vec_id").as[Long].head()
-    Ivf.invalidateIndex() // isolate from other tests' memo state
+    Reuse.invalidate() // isolate from other tests' memo state
     write(Seq(
       (0L, Array(1f, 0f, 0f, 0f)), (1L, Array(0f, 1f, 0f, 0f)),
       (2L, Array(0f, 0f, 1f, 0f)), (3L, Array(0f, 0f, 0f, 1f))))
@@ -88,7 +88,7 @@ class IvfSpec extends SparkSpec {
     val centsHeld = Ivf.fittedCentroids(held, 2, 1).map(_.toSeq)
     assert(centsHeld == centsBefore,
       "held plan must memo-hit the (stale) fitted quantizer")
-    Ivf.invalidateIndex()
+    Reuse.invalidate()
     val fresh = spark.read.parquet(p)
     assert(Ivf.fittedCentroids(fresh, 2, 1).map(_.toSeq) != centsBefore,
       "invalidation must refit the quantizer from the rewritten files")
@@ -109,8 +109,7 @@ class IvfSpec extends SparkSpec {
     val memoPq = rows(Pq.annSearchPq(emb, probes, nprobe = 3, k = 5))
 
     // cold JVM state: every in-memory memo gone — what's left is files
-    Ivf.invalidateIndex()
-    Pq.invalidateIndex()
+    Reuse.invalidate()
     assert(rows(Ivf.annSearchStaged(spark, sf, probes, nprobe = 3, k = 5)) == memoIvf)
     assert(rows(Pq.annSearchPqStaged(spark, sf, probes, nprobe = 3, k = 5)) == memoPq)
 
@@ -125,8 +124,7 @@ class IvfSpec extends SparkSpec {
 
     // second cold pass RELOADS (no refit-rewrite): file mtimes unchanged
     val mtimes = listFiles.map(_.lastModified())
-    Ivf.invalidateIndex()
-    Pq.invalidateIndex()
+    Reuse.invalidate()
     assert(rows(Ivf.annSearchStaged(spark, sf, probes, nprobe = 3, k = 5)) == memoIvf)
     assert(rows(Pq.annSearchPqStaged(spark, sf, probes, nprobe = 3, k = 5)) == memoPq)
     assert(listFiles.map(_.lastModified()) == mtimes,

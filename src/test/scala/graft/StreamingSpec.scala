@@ -226,8 +226,7 @@ class StreamingSpec extends SparkSpec {
     assert(join >= 2, "join state must stay multi-partition")
     assert(join <= math.max(2, fam),
       "join partitions must not exceed the family count")
-    if (fam >= 8) assert(join * 4 <= fam * 4 && join <= fam / 4 + 1,
-      s"commit leveling: join=$join fam=$fam")
+    assert(join == math.max(2, fam / 4), s"commit leveling: join=$join fam=$fam")
     // the conf scoping restores the session value even on throw
     val pkey = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(pkey)
