@@ -33,10 +33,8 @@ object EngineSession {
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     // parallelism-first (the Spark default) spreads even KB-scale
     // shuffles across the full core count; the docs recommend false +
-    // an explicit advisory size for production. Parameterized so both
-    // regimes are measurable here and settable per deployment.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
-      sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"),
+    // an explicit advisory size for production.
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     // 128 MiB splits: at 100 TB this yields ~800k scan tasks — the same
     // "morsel" granularity the reference derives from stripes

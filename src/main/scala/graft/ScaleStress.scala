@@ -25,7 +25,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * contract style as Bench; also appended to SCALE_STRESS.json.
   *
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_SCALE (default
-  * 10), SPARK_GRAFT_ONLY to subset queries.
+  * 10; an integer in 2..26 — the exponent divides by ln(N), and the
+  * letter-rotation salt has 26 replicas), SPARK_GRAFT_ONLY to subset
+  * queries.
   */
 object ScaleStress {
 
@@ -306,8 +308,21 @@ object ScaleStress {
     else shifted
   }
 
+  /** Valid blowup factors: ln(1) = 0 would make the exponent ±∞/NaN,
+    * and the letter-rotation salt has 26 replicas. */
+  val Scales: Range = 2 to 26
+
+  /** `SPARK_GRAFT_SCALE`, parsed and range-checked before any work. */
+  def scaleSetting(raw: Option[String]): Int = {
+    val n = raw.fold(Option(10))(_.trim.toIntOption)
+    require(n.exists(Scales.contains), "SPARK_GRAFT_SCALE must be an integer " +
+      s"in ${Scales.start}..${Scales.end}, got '${raw.getOrElse("")}'")
+    n.get
+  }
+
   def stageBlowup(spark: SparkSession, srcDir: String, n: Int): String = {
-    require(n <= 26, s"letter-rotation salt supports at most 26 replicas, got $n")
+    require(Scales.contains(n),
+      s"blowup factor must be in ${Scales.start}..${Scales.end}, got $n")
     val tag = srcDir.replaceAll("[^A-Za-z0-9.]", "_")
     // v3: per-token replica prefix + embedding sign-flip (see
     // replica()) — new path so an older staging is never reused
@@ -332,8 +347,8 @@ object ScaleStress {
   }
 
   def main(args: Array[String]): Unit = {
+    val n = scaleSetting(sys.env.get("SPARK_GRAFT_SCALE"))
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val n = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = EngineSession.local("graft-scale-stress", cpus)
     val big = stageBlowup(spark, srcDir, n)

@@ -421,18 +421,6 @@ object Dedup {
     idx
   }
 
-  /** Measurement support (tools.FoldFlatness): build one sorted index
-    * run from an arbitrary docs frame — the staged-base build step
-    * surfaced so the flatness harness can stage histories of chosen
-    * sizes outside its timed region.
-    */
-  def buildIndexRun(docs: DataFrame, runDir: String): Unit = {
-    val par = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val sigs = batchSignatures(docs, lit(true), par)
-    writeIndexRun(sigs, runDir, par)
-    sigs.unpersist()
-  }
-
   /** q188's per-micro-batch body: probe an ARRIVING docs frame
     * (doc_id, text) against the staged historical index — public so
     * the streaming ingest twin runs the same probe code path the batch

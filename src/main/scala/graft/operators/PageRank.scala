@@ -404,11 +404,8 @@ object PageRank {
             .join(surv.select(col("v").as("doc_b")), "doc_b")
             .select("doc_a", "doc_b")
             .localCheckpoint(true, MemOnly)
-          val t0 = System.nanoTime()
           val ne = next.count()
           if (ne == nEdges) { converged = true; nNodes = surv.count() }
-          if (sys.env.contains("SPARK_GRAFT_KCORE_DEBUG"))
-            println(f"kcore k=$k round=$r ne=$ne ${(System.nanoTime() - t0) / 1e9}%.2fs")
           nEdges = ne
           surv.unpersist()
           edges = next // prior round's checkpointed RDD becomes

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming twins over the DOCUMENTS table — the ingest-time form of
   * the corpus-curation operators, where a training-data pipeline
@@ -25,7 +24,6 @@ object StreamingDocs {
     */
   def decontaminateStream(spark: SparkSession, dir: String): DataFrame = {
     val feed = stagedDocsFeed(spark, dir)
-    val schema = spark.read.parquet(feed).schema
     // the static side of a stream-static join is re-evaluated EVERY
     // micro-batch unless pinned — persist the (small, per-deployment
     // static) eval gram frame once (measured 5.1→1.7 s over 4 batches)
@@ -37,9 +35,7 @@ object StreamingDocs {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     graft.TransientCaches.register(evalGrams)
     evalGrams.count()
-    val train = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
+    val train = StreamRun.feed(spark, feed)
       .filter(col("doc_id") % 97 =!= 0)
     graft.operators.Winnow.wordGramHashes(train, n = 5)
       .join(evalGrams, Seq("gh")) // stream-static inner join: stateless
@@ -51,48 +47,10 @@ object StreamingDocs {
     * fixture (AvailableNow, memory sink) — the batch-equivalence and
     * oracle surface.
     */
-  private val runSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Last completed run's progress summary per entry — the streaming
-    * analogue of a physical-plan dump (round-9 VERDICT item 4: a
-    * streaming query cannot `explain` its executed micro-batches, but
-    * its progress metrics — batch count, input rows, state rows — are
-    * the honest execution record). Read by `tools/DumpPlans` for
-    * PLANS.md.
-    */
-  val lastProgress =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Public: StreamingEvents' oracled entries record here too. */
-  def noteProgress(tag: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val ps = q.recentProgress.toSeq
-    val batches = ps.count(_.numInputRows >= 0)
-    val rows = ps.map(_.numInputRows).sum
-    val stateRows = ps.reverseIterator
-      .flatMap(p => Option(p.stateOperators).toSeq.flatten)
-      .map(_.numRowsTotal).toSeq.headOption
-    lastProgress.put(tag,
-      s"batches=$batches input_rows=$rows" +
-        stateRows.map(r => s" state_rows_total=$r").getOrElse(""))
-  }
-
-  def runDecontaminateToCompletion(spark: SparkSession, dir: String): DataFrame = {
-    // unique sink name per invocation: this helper is an ORACLED entry
-    // (q181), so bench/verify re-runs in one session must never reuse
-    // a memory-sink table
-    val name = s"graft_decon_${runSeq.incrementAndGet()}"
-    StreamingEvents.withStreamShuffle(spark) {
-      val q = decontaminateStream(spark, dir).writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      noteProgress("q181_stream_decontaminate", q)
-    }
-    spark.table(name).orderBy("doc_id")
-  }
+  def runDecontaminateToCompletion(spark: SparkSession, dir: String): DataFrame =
+    StreamRun.toMemory(spark, "q181_stream_decontaminate",
+        decontaminateStream(spark, dir), StreamRun.StatePartitions, "append")(
+      _.orderBy("doc_id"))
 
   /** Streaming per-language token counts (q16's ingest twin, and the
     * COMPLETE-mode counterpart of q181's append-mode guard): the
@@ -101,12 +59,8 @@ object StreamingDocs {
     * map-side-combined batch aggregate.
     */
   def tokenCountsStream(spark: SparkSession, dir: String): DataFrame = {
-    val feed = stagedDocsFeed(spark, dir)
-    val schema = spark.read.parquet(feed).schema
-    val docs = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    docs.groupBy("lang")
+    StreamRun.feed(spark, stagedDocsFeed(spark, dir))
+      .groupBy("lang")
       .agg(
         sum(size(graft.operators.TextAnalysis.tokens(col("text"))))
           .as("sum_tokens"),
@@ -117,25 +71,12 @@ object StreamingDocs {
 
   /** Run [[tokenCountsStream]] to completion (complete mode). */
   def runTokenCountsToCompletion(spark: SparkSession, dir: String,
-      rocksDb: Boolean = false): DataFrame = {
-    val name = s"graft_tokc_${runSeq.incrementAndGet()}"
-    val q = StreamingEvents.withStreamShuffle(spark) {
-      StreamingEvents.withRocksDbProvider(spark, rocksDb) {
-        val q0 = tokenCountsStream(spark, dir).writeStream
-          .format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q0.awaitTermination()
-        q0
-      }
-    }
-    if (rocksDb) StreamingEvents.requireRocksDbEngaged(q)
-    noteProgress(
-      if (rocksDb) "q325_stream_token_counts_rocksdb"
-      else "q184_stream_token_counts", q)
-    spark.table(name).orderBy("lang")
-  }
+      rocksDb: Boolean = false): DataFrame =
+    StreamRun.toMemory(spark,
+        if (rocksDb) "q325_stream_token_counts_rocksdb"
+        else "q184_stream_token_counts",
+        tokenCountsStream(spark, dir), StreamRun.StatePartitions, "complete",
+        rocksDb)(_.orderBy("lang"))
 
   /** Streaming ingest-time near-dup filtering — q185's ingest twin
     * (round-9 VERDICT item 7), the form a production pipeline actually
@@ -154,7 +95,6 @@ object StreamingDocs {
     */
   def runIngestDedupToCompletion(spark: SparkSession, dir: String): DataFrame = {
     val feed = stagedDocsFeed(spark, dir)
-    val schema = spark.read.parquet(feed).schema
     val idx = graft.operators.Dedup.ensureHistoricalIndex(spark, dir)
     // per-invocation sink + checkpoint (the memory-sink uniqueness rule
     // applied to a file sink): bench/verify re-runs must re-pay the
@@ -168,24 +108,13 @@ object StreamingDocs {
     // JVM — reclaim at exit so repeated runs don't accumulate.
     graft.sources.Staging.deleteOnExit(outDir)
     graft.sources.Staging.deleteOnExit(s"$outDir.ckpt")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-      .filter(col("doc_id") % 5 === 0)
-    StreamingEvents.withStreamShuffle(spark,
-        StreamingEvents.streamIngestPartitions) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.Dedup.probeDocsAgainstIndex(batch.toDF(), idx)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .option("checkpointLocation", s"$outDir.ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      noteProgress("q188_stream_ingest_dedup", q)
-    }
+    val stream = StreamRun.feed(spark, feed).filter(col("doc_id") % 5 === 0)
+    StreamRun.toCompletion(spark, "q188_stream_ingest_dedup", stream,
+        StreamRun.IngestPartitions, checkpoint = Some(s"$outDir.ckpt"))(
+      StreamRun.eachBatch { batch =>
+        graft.operators.Dedup.probeDocsAgainstIndex(batch, idx)
+          .write.mode("append").parquet(outDir)
+      })
     spark.read.parquet(outDir).orderBy("new_doc", "hist_doc")
   }
 
@@ -203,7 +132,6 @@ object StreamingDocs {
     */
   def runAnnIngestToCompletion(spark: SparkSession, dir: String): DataFrame = {
     val feed = stagedVecsFeed(spark, dir)
-    val schema = spark.read.parquet(feed).schema
     val (cents, lists0) = graft.operators.Ivf.historyAnnIndex(spark, dir)
     val lists = lists0
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -213,25 +141,14 @@ object StreamingDocs {
       s"run_${java.util.UUID.randomUUID().toString.take(8)}"
     graft.sources.Staging.deleteOnExit(outDir)
     graft.sources.Staging.deleteOnExit(s"$outDir.ckpt")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-      .filter(col("vec_id") % 5 === 0)
-    StreamingEvents.withStreamShuffle(spark,
-        StreamingEvents.streamIngestPartitions) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.Ivf
-            .probeAnnLists(batch.toDF(), cents, lists, threshold = 0.45, nAssign = 4)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .option("checkpointLocation", s"$outDir.ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      noteProgress("q196_stream_ann_ingest", q)
-    }
+    val stream = StreamRun.feed(spark, feed).filter(col("vec_id") % 5 === 0)
+    StreamRun.toCompletion(spark, "q196_stream_ann_ingest", stream,
+        StreamRun.IngestPartitions, checkpoint = Some(s"$outDir.ckpt"))(
+      StreamRun.eachBatch { batch =>
+        graft.operators.Ivf
+          .probeAnnLists(batch, cents, lists, threshold = 0.45, nAssign = 4)
+          .write.mode("append").parquet(outDir)
+      })
     spark.read.parquet(outDir).orderBy("new_vec", "hist_vec")
   }
 
@@ -251,32 +168,21 @@ object StreamingDocs {
     */
   def runQualityFilterToCompletion(spark: SparkSession, dir: String): DataFrame = {
     val feed = stagedDocsFeed(spark, dir)
-    val schema = spark.read.parquet(feed).schema
     val w = graft.operators.Classify.fittedWeights(spark, dir)
     val outDir = s"${graft.sources.Staging.stagingRoot()}/graft_ingest_quality/" +
       s"run_${java.util.UUID.randomUUID().toString.take(8)}"
     graft.sources.Staging.deleteOnExit(outDir)
     graft.sources.Staging.deleteOnExit(s"$outDir.ckpt")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-    StreamingEvents.withStreamShuffle(spark,
-        StreamingEvents.streamIngestPartitions) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.operators.Classify
-            .scoreDocs(graft.operators.Classify
-              .corpusWithCorruptions(batch.toDF()).drop("y"), w)
-            .filter(col("s6") >= 500000L)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .option("checkpointLocation", s"$outDir.ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      noteProgress("q257_stream_quality_filter", q)
-    }
+    val stream = StreamRun.feed(spark, feed)
+    StreamRun.toCompletion(spark, "q257_stream_quality_filter", stream,
+        StreamRun.IngestPartitions, checkpoint = Some(s"$outDir.ckpt"))(
+      StreamRun.eachBatch { batch =>
+        graft.operators.Classify
+          .scoreDocs(graft.operators.Classify
+            .corpusWithCorruptions(batch).drop("y"), w)
+          .filter(col("s6") >= 500000L)
+          .write.mode("append").parquet(outDir)
+      })
     spark.read.parquet(outDir).orderBy("doc_id")
   }
 

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Structured Streaming slice (SURVEY §7.2 M4): the q24 tumbling-window
@@ -24,12 +23,9 @@ object StreamingEvents {
   def hourlyCounts(spark: SparkSession, dir: String): DataFrame = {
     // The file streaming source requires a directory; the fixture is a
     // single parquet file — stage a copy under scratch once.
-    val src = stagedStreamSource(spark, dir)
-    val schema = spark.read.parquet(src).schema
-    spark.readStream
-      .schema(schema)
-      .parquet(src)
-      .withColumn("ts", graft.Tables.eventsTs(schema("ts").dataType))
+    val events = StreamRun.feed(spark, stagedStreamSource(spark, dir))
+    events
+      .withColumn("ts", graft.Tables.eventsTs(events.schema("ts").dataType))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
@@ -47,11 +43,9 @@ object StreamingEvents {
     * production use would add a timeout policy for key expiry.
     */
   def statefulUserCounts(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
-    val src = stagedStreamSource(spark, dir)
-    val schema = spark.read.parquet(src).schema
-    val events = spark.readStream.schema(schema).parquet(src)
+    val events = StreamRun.feed(spark, stagedStreamSource(spark, dir))
       .select(col("user_id"), col("value"))
       .as[(Long, Double)]
     val counts = events
@@ -65,20 +59,14 @@ object StreamingEvents {
           state.update((c, s))
           UserAgg(user, c, s)
       }
-    val name = s"graft_state_${System.identityHashCode(spark)}"
-    withStreamShuffle(spark) {
-      val q = counts.toDF().writeStream
-        .format("memory").queryName(name).outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
     // Update-mode emits one row per key per batch; latest wins.
-    spark.table(name)
-      .groupBy("user_id")
-      .agg(org.apache.spark.sql.functions.max(struct(col("cnt"), col("sum_value"))).as("m"))
-      .select(col("user_id"), col("m.cnt").as("cnt"),
-        org.apache.spark.sql.functions.round(col("m.sum_value"), 6).as("sum_value"))
-      .orderBy("user_id")
+    StreamRun.toMemory(spark, "stream_user_counts", counts.toDF(),
+        StreamRun.StatePartitions, "update")(
+      _.groupBy("user_id")
+        .agg(org.apache.spark.sql.functions.max(struct(col("cnt"), col("sum_value"))).as("m"))
+        .select(col("user_id"), col("m.cnt").as("cnt"),
+          org.apache.spark.sql.functions.round(col("m.sum_value"), 6).as("sum_value"))
+        .orderBy("user_id"))
   }
 
   /** Streaming sessionization: the q49 semantics as a watermarked
@@ -90,12 +78,9 @@ object StreamingEvents {
     * StreamingSpec.
     */
   def sessionCounts(spark: SparkSession, dir: String): DataFrame = {
-    val src = stagedStreamSource(spark, dir)
-    val schema = spark.read.parquet(src).schema
-    spark.readStream
-      .schema(schema)
-      .parquet(src)
-      .withColumn("ts", graft.Tables.eventsTs(schema("ts").dataType))
+    val events = StreamRun.feed(spark, stagedStreamSource(spark, dir))
+    events
+      .withColumn("ts", graft.Tables.eventsTs(events.schema("ts").dataType))
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("win"))
       .agg(count(lit(1)).as("n_events"))
@@ -105,18 +90,9 @@ object StreamingEvents {
   }
 
   /** Run [[sessionCounts]] to completion over the bounded fixture. */
-  def runSessionsToCompletion(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_sessions_${System.identityHashCode(spark)}"
-    withStreamShuffle(spark) {
-      val q = sessionCounts(spark, dir).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy("user_id", "w")
-  }
+  def runSessionsToCompletion(spark: SparkSession, dir: String): DataFrame =
+    StreamRun.toMemory(spark, "stream_sessions", sessionCounts(spark, dir),
+      StreamRun.StatePartitions, "complete")(_.orderBy("user_id", "w"))
 
   /** Stream-stream interval join: the q50 semantics with BOTH sides
     * streaming — probe events (event_id % 10 = 0) joined to same-user
@@ -129,9 +105,10 @@ object StreamingEvents {
     */
   def streamStreamIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
     val src = stagedStreamSource(spark, dir)
-    val schema = spark.read.parquet(src).schema
-    def stream() = spark.readStream.schema(schema).parquet(src)
-      .withColumn("ts", graft.Tables.eventsTs(schema("ts").dataType))
+    def stream() = {
+      val events = StreamRun.feed(spark, src)
+      events.withColumn("ts", graft.Tables.eventsTs(events.schema("ts").dataType))
+    }
     val probes = stream()
       .filter(col("event_id") % 10 === 0)
       .select(col("user_id").as("pu"), col("event_id").as("pid"),
@@ -151,18 +128,10 @@ object StreamingEvents {
   /** Run [[streamStreamIntervalJoin]] to completion over the bounded
     * fixture.
     */
-  def runStreamJoinToCompletion(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_ssjoin_${System.identityHashCode(spark)}"
-    withStreamShuffle(spark, streamJoinStatePartitions) {
-      val q = streamStreamIntervalJoin(spark, dir).writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy("user_id", "pid", "fid")
-  }
+  def runStreamJoinToCompletion(spark: SparkSession, dir: String): DataFrame =
+    StreamRun.toMemory(spark, "stream_interval_join",
+      streamStreamIntervalJoin(spark, dir), StreamRun.JoinStatePartitions,
+      "append")(_.orderBy("user_id", "pid", "fid"))
 
   /** Stream-STREAM interval join under the differential gate (q212):
     * q181/q184/q207 proved stream-static joins and three aggregation
@@ -181,20 +150,17 @@ object StreamingEvents {
   def streamStreamFeedJoin(spark: SparkSession, dir: String): DataFrame = {
     // 24 h window (vs q50's 1 h): wide enough that time-quartile
     // boundaries split real pairs - 6 cross-batch pairs at sf0.001,
-    // 106 at sf0.01 - so the buffered-state path is provably exercised
-    val feed = stagedTimeOrderedFeed(spark, dir)
-    val schema = spark.read.parquet(feed).schema
+    // 106 at sf0.01 - so the buffered-state path is provably exercised.
     // ONE source feeds both join sides (r15 optimization round): the
-    // two sides consume the same feed, and two readStream relations
+    // two sides consume the same feed, and two file-stream relations
     // over it doubled the per-micro-batch source machinery
     // (latestOffset/getBatch/offset-log entries) for identical data.
     // One relation referenced twice keeps batch composition identical
     // (same file per trigger on both sides) and the result set is
     // unchanged — the oracle recomputes every pair from scratch.
-    val events = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-      .withColumn("ts", graft.Tables.eventsTs(schema("ts").dataType))
+    val raw = StreamRun.feed(spark, stagedTimeOrderedFeed(spark, dir))
+    val events = raw
+      .withColumn("ts", graft.Tables.eventsTs(raw.schema("ts").dataType))
     val probes = events
       .filter(col("user_id") < 50 && col("event_id") % 10 === 0)
       .select(col("user_id").as("pu"), col("event_id").as("pid"),
@@ -217,35 +183,13 @@ object StreamingEvents {
     * invocation: oracled entry, re-run by bench.
     */
   def runStreamFeedJoinToCompletion(spark: SparkSession, dir: String,
-      rocksDb: Boolean = false): DataFrame = {
-    val name = s"graft_ssfeed_${runSeq.incrementAndGet()}"
-    // a stream-stream join commits FOUR state stores per shuffle
-    // partition per micro-batch (left/right keyToNumValues +
-    // keyWithIndexToValue); at the session default of 32 partitions
-    // that is 640 store commits for a 5-batch run — pure fixed
-    // overhead (measured 20 s). At the family's 8 it still pays 4× the
-    // single-store runners' commit machinery for the same bounded
-    // state, so the join sizes its partitions to hold the per-batch
-    // store-COMMIT count level with the family instead
-    // ([[streamJoinStatePartitions]] = statePartitions/4, floor 2 —
-    // still multi-partition; measured at sf0.1/local[32]: q212
-    // 8.56→5.83 s, q326 8.41→5.97 s isolated). Results are partition-
-    // count-invariant and the oracle proves it every run.
-    withStreamShuffle(spark, streamJoinStatePartitions) {
-      withRocksDbProvider(spark, rocksDb) {
-        val q = streamStreamFeedJoin(spark, dir).writeStream
-          .format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        if (rocksDb) requireRocksDbEngaged(q)
-        StreamingDocs.noteProgress(
-          if (rocksDb) "q326_stream_join_rocksdb" else "q212_stream_stream_join", q)
-      }
-    }
-    spark.table(name).orderBy("user_id", "pid", "fid")
-  }
+      rocksDb: Boolean = false): DataFrame =
+    // four state stores per partition per batch: see
+    // [[StreamRun.JoinStatePartitions]]
+    StreamRun.toMemory(spark,
+        if (rocksDb) "q326_stream_join_rocksdb" else "q212_stream_stream_join",
+        streamStreamFeedJoin(spark, dir), StreamRun.JoinStatePartitions, "append",
+        rocksDb)(_.orderBy("user_id", "pid", "fid"))
 
   final case class UserAggExact(user_id: Long, cnt: Long, sum_micros: Long)
 
@@ -265,11 +209,7 @@ object StreamingEvents {
   def exactUserState(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
-    val feed = stagedTimeOrderedFeed(spark, dir)
-    val schema = spark.read.parquet(feed).schema
-    val events = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
+    val events = StreamRun.feed(spark, stagedTimeOrderedFeed(spark, dir))
       .select(col("user_id"), col("value"))
       .as[(Long, Double)]
     events.groupByKey(_._1)
@@ -298,31 +238,16 @@ object StreamingEvents {
     * per key wins via monotone-count struct max).
     */
   def runExactUserStateToCompletion(spark: SparkSession, dir: String,
-      rocksDb: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.streaming.OutputMode
-    val name = s"graft_ustate_${runSeq.incrementAndGet()}"
-    val q = withStreamShuffle(spark) {
-      withRocksDbProvider(spark, rocksDb) {
-        val q0 = exactUserState(spark, dir).writeStream
-          .format("memory").queryName(name)
-          .outputMode(OutputMode.Update())
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q0.awaitTermination()
-        q0
-      }
-    }
-    if (rocksDb) requireRocksDbEngaged(q)
-    StreamingDocs.noteProgress(
-      if (rocksDb) "q327_stream_user_state_rocksdb" else "q215_stream_user_state", q)
-    spark.table(name)
-      .groupBy("user_id")
-      .agg(max(struct(col("cnt"), col("sum_micros"))).as("m"))
-      .select(col("user_id"), col("m.cnt").as("cnt"),
-        (round(col("m.sum_micros").cast("double") / lit(1000000.0), 6)
-          + lit(0.0)).as("sum_v"))
-      .orderBy("user_id")
-  }
+      rocksDb: Boolean = false): DataFrame =
+    StreamRun.toMemory(spark,
+        if (rocksDb) "q327_stream_user_state_rocksdb" else "q215_stream_user_state",
+        exactUserState(spark, dir), StreamRun.StatePartitions, "update", rocksDb)(
+      _.groupBy("user_id")
+        .agg(max(struct(col("cnt"), col("sum_micros"))).as("m"))
+        .select(col("user_id"), col("m.cnt").as("cnt"),
+          (round(col("m.sum_micros").cast("double") / lit(1000000.0), 6)
+            + lit(0.0)).as("sum_v"))
+        .orderBy("user_id"))
 
   final case class TwsProfile(user_id: Long, cnt: Long, sum_micros: Long,
       n_types: Long, top_type: String, top_cnt: Long)
@@ -400,38 +325,25 @@ object StreamingEvents {
       ckpt: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import spark.implicits._
-    val feed = stagedTimeOrderedFeed(spark, dir)
-    val schema = spark.read.parquet(feed).schema
-    val name = s"graft_tws_${runSeq.incrementAndGet()}"
-    val q = withTwsRocksDb(spark) {
-      val events = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .select(col("user_id"), col("value"), col("event_type"))
-        .as[(Long, Double, String)]
-      val out = events.groupByKey(_._1)
-        .transformWithState(new UserProfileProcessor,
-          TimeMode.None(), OutputMode.Update())
-      val w = out.toDF().writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
-      val q0 = ckpt.fold(w)(c => w.option("checkpointLocation", c)).start()
-      q0.awaitTermination()
-      q0
-    }
-    requireRocksDbEngaged(q)
-    StreamingDocs.noteProgress("q341_stream_tws_profile", q)
-    spark.table(name)
-      .groupBy("user_id")
-      .agg(max(struct(col("cnt"), col("sum_micros"), col("n_types"),
-        col("top_type"), col("top_cnt"))).as("m"))
-      .select(col("user_id"), col("m.cnt").as("cnt"),
-        (round(col("m.sum_micros").cast("double") / lit(1000000.0), 6)
-          + lit(0.0)).as("sum_v"),
-        col("m.n_types").as("n_types"), col("m.top_type").as("top_type"),
-        col("m.top_cnt").as("top_cnt"))
-      .orderBy("user_id")
+    val path = stagedTimeOrderedFeed(spark, dir)
+    def profiles = StreamRun.feed(spark, path)
+      .select(col("user_id"), col("value"), col("event_type"))
+      .as[(Long, Double, String)]
+      .groupByKey(_._1)
+      .transformWithState(new UserProfileProcessor,
+        TimeMode.None(), OutputMode.Update())
+      .toDF()
+    StreamRun.toMemory(spark, "q341_stream_tws_profile", profiles,
+        StreamRun.StatePartitions, "update", rocksDb = true, checkpoint = ckpt)(
+      _.groupBy("user_id")
+        .agg(max(struct(col("cnt"), col("sum_micros"), col("n_types"),
+          col("top_type"), col("top_cnt"))).as("m"))
+        .select(col("user_id"), col("m.cnt").as("cnt"),
+          (round(col("m.sum_micros").cast("double") / lit(1000000.0), 6)
+            + lit(0.0)).as("sum_v"),
+          col("m.n_types").as("n_types"), col("m.top_type").as("top_type"),
+          col("m.top_cnt").as("top_cnt"))
+        .orderBy("user_id"))
   }
 
   final case class TwsSession(user_id: Long, start_us: Long, end_us: Long,
@@ -536,31 +448,21 @@ object StreamingEvents {
       ckpt: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import spark.implicits._
-    val feed = stagedTimeOrderedFeed(spark, dir)
-    val schema = spark.read.parquet(feed).schema
-    val name = s"graft_twstimer_${runSeq.incrementAndGet()}"
-    val q = withTwsRocksDb(spark) {
-      val events = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .withColumn("ts", graft.Tables.eventsTs(schema("ts").dataType))
+    val path = stagedTimeOrderedFeed(spark, dir)
+    def sessions = {
+      val raw = StreamRun.feed(spark, path)
+      raw.withColumn("ts", graft.Tables.eventsTs(raw.schema("ts").dataType))
         .withWatermark("ts", "90 minutes")
         .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("tu"))
         .as[(Long, java.sql.Timestamp, Long)]
-      val out = events.groupByKey(_._1)
+        .groupByKey(_._1)
         .transformWithState(new SessionTimerProcessor,
           TimeMode.EventTime(), OutputMode.Append())
-      val w = out.toDF().writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-      val q0 = ckpt.fold(w)(c => w.option("checkpointLocation", c)).start()
-      q0.awaitTermination()
-      q0
+        .toDF()
     }
-    requireRocksDbEngaged(q)
-    StreamingDocs.noteProgress("q342_stream_tws_timers", q)
-    spark.table(name).orderBy("user_id", "start_us")
+    StreamRun.toMemory(spark, "q342_stream_tws_timers", sessions,
+        StreamRun.StatePartitions, "append", rocksDb = true, checkpoint = ckpt)(
+      _.orderBy("user_id", "start_us"))
   }
 
   /** Offline inspection of a `transformWithState` MAP state variable
@@ -632,31 +534,19 @@ object StreamingEvents {
     */
   private def runAggToRetainedCheckpoint(spark: SparkSession, dir: String,
       tag: String): String = {
-    import org.apache.spark.sql.streaming.OutputMode
-    val feed = stagedTimeOrderedFeed(spark, dir)
-    val schema = spark.read.parquet(feed).schema
+    val events = StreamRun.feed(spark, stagedTimeOrderedFeed(spark, dir))
     val root = s"${graft.sources.Staging.stagingRoot()}/graft_stateread/" +
       s"run_${java.util.UUID.randomUUID().toString.take(8)}"
     graft.sources.Staging.deleteOnExit(root)
-    val name = s"graft_stateread_${runSeq.incrementAndGet()}"
-    val counts = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-      .withColumn("tu", graft.Tables.eventsTsMicros(schema("ts").dataType))
+    val counts = events
+      .withColumn("tu", graft.Tables.eventsTsMicros(events.schema("ts").dataType))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("cnt"),
         sum(round(col("value") * lit(1000000.0), 0).cast("long"))
           .as("sum_micros"),
         min(col("tu")).as("min_tu"), max(col("tu")).as("max_tu"))
-    withStreamShuffle(spark) {
-      val q = counts.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamingDocs.noteProgress(tag, q)
-    }
+    StreamRun.toMemory(spark, tag, counts, StreamRun.StatePartitions, "complete",
+      checkpoint = Some(s"$root/ckpt"))(identity)
     s"$root/ckpt"
   }
 
@@ -718,35 +608,22 @@ object StreamingEvents {
     // exit so repeated bench/verify runs don't grow without bound
     // (the fingerprint-keyed staged dirs, by contrast, are reused).
     graft.sources.Staging.deleteOnExit(root)
-    val feed = s"$root/feed"
+    val input = s"$root/feed"
     val sink = s"$root/sink"
-    val ckpt = s"$root/ckpt"
-    val schema = spark.read.parquet(src).schema
     def copyIn(k: Int): Unit =
-      graft.sources.Staging.copyInto(f"$src/quartile_$k%02d.parquet", feed,
+      graft.sources.Staging.copyInto(f"$src/quartile_$k%02d.parquet", input,
         f"quartile_$k%02d.parquet")
-    def phase(): Unit = {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.toDF().select(col("event_id"), col("event_type"), col("value"))
-            .write.mode("append").parquet(sink)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamingDocs.noteProgress("q227_stream_restart", q)
-    }
-    withStreamShuffle(spark) {
-      copyIn(0); copyIn(1)
-      phase() // first life of the pipeline: two quartiles
-      copyIn(2); copyIn(3)
-      phase() // restart: the checkpoint must admit exactly the new files
-    }
+    copyIn(0); copyIn(1)
+    // one source frame for both lives: each start lists the directory anew
+    val stream = StreamRun.feed(spark, input)
+    def phase(): Unit =
+      StreamRun.toCompletion(spark, "q227_stream_restart", stream,
+          StreamRun.StatePartitions, checkpoint = Some(s"$root/ckpt"))(
+        StreamRun.eachBatch(_.select(col("event_id"), col("event_type"), col("value"))
+          .write.mode("append").parquet(sink)))
+    phase() // first life of the pipeline: two quartiles
+    copyIn(2); copyIn(3)
+    phase() // restart: the checkpoint must admit exactly the new files
     spark.read.parquet(sink)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
@@ -767,14 +644,12 @@ object StreamingEvents {
       step: Double = 100.0): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
-    val src = stagedStreamSource(spark, dir)
-    val schema = spark.read.parquet(src).schema
     // integer-cents fold, mirroring the batch q78 exactly (the q14
     // DECIMAL(18,2) money cast, then a Long state) — a double state
     // would desync from the batch's exact windowed sum at a floor
     // boundary (the sf1 divergence that forced the integer form)
     val stepCents = math.round(step * 100)
-    val events = spark.readStream.schema(schema).parquet(src)
+    val events = StreamRun.feed(spark, stagedStreamSource(spark, dir))
       .select(col("user_id"), col("event_id"),
         (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))
           * lit(100)).cast(org.apache.spark.sql.types.LongType).as("c"))
@@ -795,14 +670,9 @@ object StreamingEvents {
           state.update(cum)
           out.iterator
       }
-    val name = s"graft_alerts_${System.identityHashCode(spark)}"
-    withStreamShuffle(spark) {
-      val q = alerts.toDF("user_id", "event_id", "level").writeStream
-        .format("memory").queryName(name).outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy("user_id", "event_id")
+    StreamRun.toMemory(spark, "stream_threshold_alerts",
+        alerts.toDF("user_id", "event_id", "level"), StreamRun.StatePartitions, "append")(
+      _.orderBy("user_id", "event_id"))
   }
 
   /** Streaming SCD2 (the q108 semantics as streaming CDC): explicit
@@ -820,11 +690,10 @@ object StreamingEvents {
   def scd2ClosedIntervals(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
-    val src = stagedStreamSource(spark, dir)
-    val schema = spark.read.parquet(src).schema
-    val events = spark.readStream.schema(schema).parquet(src)
+    val raw = StreamRun.feed(spark, stagedStreamSource(spark, dir))
+    val events = raw
       .select(col("user_id"),
-        graft.Tables.eventsTsMicros(schema("ts").dataType).as("tus"),
+        graft.Tables.eventsTsMicros(raw.schema("ts").dataType).as("tus"),
         col("event_id"), floor(col("value")).cast("long").as("v"))
       .as[(Long, Long, Long, Long)]
     val closed = events
@@ -850,17 +719,9 @@ object StreamingEvents {
   }
 
   /** Run [[scd2ClosedIntervals]] to completion over the bounded fixture. */
-  def runScd2ToCompletion(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.OutputMode
-    val name = s"graft_scd2_${System.identityHashCode(spark)}"
-    withStreamShuffle(spark) {
-      val q = scd2ClosedIntervals(spark, dir).writeStream
-        .format("memory").queryName(name).outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy("user_id", "valid_from")
-  }
+  def runScd2ToCompletion(spark: SparkSession, dir: String): DataFrame =
+    StreamRun.toMemory(spark, "stream_scd2", scd2ClosedIntervals(spark, dir),
+      StreamRun.StatePartitions, "append")(_.orderBy("user_id", "valid_from"))
 
   /** Streaming EWMA twin: q114's per-user smoothing as the literal
     * recurrence sᵢ = α·vᵢ + (1-α)·sᵢ₋₁ over (ewma, n) keyed state —
@@ -873,12 +734,11 @@ object StreamingEvents {
   def ewmaStates(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import spark.implicits._
-    val src = stagedStreamSource(spark, dir)
-    val schema = spark.read.parquet(src).schema
     val alpha = graft.operators.Ewma.Alpha
-    spark.readStream.schema(schema).parquet(src)
+    val events = StreamRun.feed(spark, stagedStreamSource(spark, dir))
+    events
       .select(col("user_id"),
-        graft.Tables.eventsTsMicros(schema("ts").dataType).as("tus"),
+        graft.Tables.eventsTsMicros(events.schema("ts").dataType).as("tus"),
         col("event_id"), col("value"))
       .as[(Long, Long, Long, Double)]
       .groupByKey(_._1)
@@ -901,18 +761,12 @@ object StreamingEvents {
     * with the largest n_events (n is monotone in events consumed).
     */
   def runEwmaToCompletion(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_ewma_${System.identityHashCode(spark)}"
-    withStreamShuffle(spark) {
-      val q = ewmaStates(spark, dir).writeStream
-        .format("memory").queryName(name).outputMode("update")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("n_events").desc)
-    spark.table(name)
-      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-      .select("user_id", "n_events", "ewma").orderBy("user_id")
+    StreamRun.toMemory(spark, "stream_ewma", ewmaStates(spark, dir),
+        StreamRun.StatePartitions, "update")(
+      _.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+        .select("user_id", "n_events", "ewma").orderBy("user_id"))
   }
 
   /** Streaming exactly-once dedup: the q71 semantics with the doubled
@@ -925,28 +779,20 @@ object StreamingEvents {
     */
   def dedupedStream(spark: SparkSession, dir: String): DataFrame = {
     val src = stagedStreamSource(spark, dir)
-    val schema = spark.read.parquet(src).schema
-    def stream() = spark.readStream.schema(schema).parquet(src)
-      .withColumn("ts", graft.Tables.eventsTs(schema("ts").dataType))
-      .select(col("event_id"), col("ts"), col("event_type"), col("value"))
+    def stream() = {
+      val events = StreamRun.feed(spark, src)
+      events.withColumn("ts", graft.Tables.eventsTs(events.schema("ts").dataType))
+        .select(col("event_id"), col("ts"), col("event_type"), col("value"))
+    }
     stream().unionAll(stream())
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
   }
 
   /** Run [[dedupedStream]] to completion over the bounded fixture. */
-  def runDedupToCompletion(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_dedup_${System.identityHashCode(spark)}"
-    withStreamShuffle(spark) {
-      val q = dedupedStream(spark, dir).writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name)
-  }
+  def runDedupToCompletion(spark: SparkSession, dir: String): DataFrame =
+    StreamRun.toMemory(spark, "stream_dedup", dedupedStream(spark, dir),
+      StreamRun.StatePartitions, "append")(identity)
 
   /** Streaming IVM twin: q129's delta-merge as a stateful foreachBatch
     * sink — the production form of incremental view maintenance, where
@@ -990,12 +836,9 @@ object StreamingEvents {
       .as[(String, Long, java.math.BigDecimal)].collect()
       .foreach { case (m, c, t) => state(m) = (c, t) }
 
-    val schema = spark.read.parquet(feedDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feedDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    // keeps the session's partition count: no state-sized scope
+    StreamRun.toCompletion(spark, "stream_ivm_rollup", StreamRun.feed(spark, feedDir),
+        spark.sessionState.conf.numShufflePartitions)(StreamRun.eachBatch { batch =>
         // the batch-local delta is a Spark aggregate (map-side
         // combined); only the group-sized result reaches the driver
         val delta = batch.groupBy("month")
@@ -1011,21 +854,11 @@ object StreamingEvents {
           val c1 = c0 + dc
           if (c1 > 0) state(m) = (c1, t0.add(dv)) else state.remove(m)
         }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     state.toSeq.map { case (m, (c, t)) => (m, c, t.doubleValue()) }
       .toDF("month", "cnt", "total")
       .orderBy("month")
   }
-
-  /** The file streaming source requires a directory; the fixture is a
-    * single parquet file — stage a copy under scratch, fingerprint-
-    * keyed and write-once via [[graft.sources.Staging]].
-    */
-  private val runSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Session windows under the differential gate (q207) — the third
     * stateful streaming shape to execute inside the oracle, after
@@ -1042,13 +875,9 @@ object StreamingEvents {
     * gaps-and-islands oracle.
     */
   def sessionFeedCounts(spark: SparkSession, dir: String): DataFrame = {
-    val feed = stagedTimeOrderedFeed(spark, dir)
-    val schema = spark.read.parquet(feed).schema
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-      .withColumn("ts", graft.Tables.eventsTs(schema("ts").dataType))
+    val events = StreamRun.feed(spark, stagedTimeOrderedFeed(spark, dir))
+    events
+      .withColumn("ts", graft.Tables.eventsTs(events.schema("ts").dataType))
       .filter(col("user_id") < 20)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("win"))
@@ -1064,19 +893,9 @@ object StreamingEvents {
     * state never evicted over the bounded feed). Fresh memory-sink
     * name per invocation: this is an ORACLED entry, re-run by bench.
     */
-  def runSessionFeedToCompletion(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_sessfeed_${runSeq.incrementAndGet()}"
-    withStreamShuffle(spark) {
-      val q = sessionFeedCounts(spark, dir).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamingDocs.noteProgress("q207_stream_sessions", q)
-    }
-    spark.table(name).orderBy("user_id", "w_start")
-  }
+  def runSessionFeedToCompletion(spark: SparkSession, dir: String): DataFrame =
+    StreamRun.toMemory(spark, "q207_stream_sessions", sessionFeedCounts(spark, dir),
+      StreamRun.StatePartitions, "complete")(_.orderBy("user_id", "w_start"))
 
   /** q301 — [[sessionFeedCounts]] executed under the ROCKSDB state
     * store (q207's config twin): the provider a 100 TB stream actually
@@ -1090,162 +909,9 @@ object StreamingEvents {
     * certify the wrong backend.
     */
   def runSessionFeedRocksDb(spark: SparkSession, dir: String): DataFrame =
-    withStreamShuffle(spark) { withRocksDbProvider(spark, enable = true) {
-      val name = s"graft_sessrocks_${runSeq.incrementAndGet()}"
-      val q = sessionFeedCounts(spark, dir).writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      requireRocksDbEngaged(q)
-      StreamingDocs.noteProgress("q301_stream_sessions_rocksdb", q)
-      spark.table(name).orderBy("user_id", "w_start")
-    } }
-
-  /** Run `body` under the RocksDB state-store provider (no-op when
-    * `enable` is false — the shared shape lets every stateful runner
-    * grow a config twin without duplicating the set/restore dance).
-    * The conf is restored even when `body` throws; callers must pair
-    * this with [[requireRocksDbEngaged]] on their completed query —
-    * setting the conf alone proves nothing if the provider silently
-    * fell back (r11 VERDICT item 3).
-    */
-  def withRocksDbProvider[T](spark: SparkSession, enable: Boolean)(body: => T): T =
-    if (!enable) body
-    else {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      // Changelog checkpointing rides along with the provider (r14
-      // optimization round, extending the TWS finding to the WHOLE
-      // RocksDB family q301/q325–q328): with the snapshot default,
-      // every commit saves and fsyncs a full snapshot zip per
-      // partition per micro-batch — O(state) IO each batch and a
-      // measured fsync storm on this host (PERF_NOTES §Round 14).
-      // Changelog mode appends O(delta) changelogs; snapshots amortize
-      // to the maintenance thread. Content is provider-internal —
-      // every RocksDB twin's oracle hash is unchanged (the q341
-      // partition-invariance argument) — and at 100 TB state the
-      // changelog mode is the production configuration.
-      val ckey =
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      val prev = spark.conf.getOption(key)
-      val prevC = spark.conf.getOption(ckey)
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(ckey, "true")
-      try body
-      finally {
-        prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-        prevC match {
-          case Some(v) => spark.conf.set(ckey, v)
-          case None => spark.conf.unset(ckey)
-        }
-      }
-    }
-
-  /** State-partition count for every bounded-stream runner (r14
-    * optimization round, generalizing the TWS/stream-stream-join
-    * sizing to the whole streaming family). Partition count must
-    * track state VOLUME, not the host's CPU default: the fixture's
-    * per-store state is KB-scale, and at the session default of 32
-    * shuffle partitions every stateful micro-batch commits 32 state
-    * stores whose per-partition fsyncs serialize on the block-device
-    * journal (measured: a stream-stream join pays FOUR stores per
-    * partition per batch — 640 commits for a 5-batch run at 32, ≈20 s
-    * of pure fixed overhead vs ≈6 s at 8). 4 still certifies
-    * multi-partition distribution; a 100 TB deployment sizes this UP
-    * with its state (the knob follows the data) — parameterized via
-    * SPARK_GRAFT_STATE_PARTITIONS so the driver's low-core scaling
-    * runs and a production profile can set their own value. r15: the
-    * default dropped 8 → 4 on a family-wide A/B (73.3 → 66.7 s over
-    * the 22 streaming entries; the stateful runners read 0.75–0.94×
-    * — per-partition changelog/delta fsync ~100 ms/batch is the
-    * dominant per-batch term at KB-scale state — while the stateless
-    * ingest runners keep [[streamIngestPartitions]]).
-    */
-  def streamStatePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_STATE_PARTITIONS", "4")
-
-  /** Partition count for the STATELESS foreachBatch ingest runners
-    * (q188/q196/q257): they commit no state stores — their micro-batch
-    * body runs real batch jobs (index probes, model scoring) whose
-    * parallelism this conf sizes — so the state-commit argument above
-    * does not apply and they keep the wider fan-out (measured at
-    * sf0.1/local[32]: the family-wide A/B that took the stateful
-    * runners 8→4 at 0.75–0.9× moved these three 0.98–1.17×, i.e.
-    * their batch compute wants the parallelism the state runners'
-    * fsyncs don't).
-    */
-  def streamIngestPartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_INGEST_PARTITIONS", "8")
-
-  /** Partition count for STREAM-STREAM joins (q212/q326): a join
-    * commits FOUR state stores per partition per micro-batch where
-    * every other stateful runner commits one, so at the family count it
-    * pays 4× the family's per-batch commit machinery for the same
-    * bounded state. Derived as statePartitions/4 (floored at 2 — still
-    * multi-partition distribution) to hold the per-batch store-commit
-    * count level with the family; a production profile overrides via
-    * SPARK_GRAFT_JOIN_STATE_PARTITIONS, and the family knob still
-    * scales both together (the count follows state volume either way).
-    * Measured at sf0.1/local[32], isolated bench: q212 8.56→5.83 s,
-    * q326 8.41→5.97 s; 1 partition measured no better than 2 (the
-    * commit path saturates), so the floor stays multi-partition.
-    */
-  def streamJoinStatePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_JOIN_STATE_PARTITIONS",
-      math.max(2, streamStatePartitions.toInt / 4).toString)
-
-  /** Run `body` with `spark.sql.shuffle.partitions` sized for stream
-    * state (`partitions`, default [[streamStatePartitions]]), restored
-    * even on throw. Applies to the stream AND its foreachBatch batch
-    * jobs (conf-scoped around the full run). Results are
-    * partition-count-invariant — state evolution is key-partitioned
-    * and every runner's output carries a total ORDER BY; the oracle
-    * proves it on every run. Assumes the session's streaming runners
-    * execute sequentially (bench/verify/spec do): the conf is
-    * session-global for the duration of `body`.
-    */
-  def withStreamShuffle[T](spark: SparkSession,
-      partitions: String = streamStatePartitions)(body: => T): T = {
-    val pkey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(pkey)
-    spark.conf.set(pkey, partitions)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(pkey, v)
-      case None => spark.conf.unset(pkey)
-    }
-  }
-
-  /** RocksDB provider PLUS changelog checkpointing — the
-    * `transformWithState` runners' mode. Why not the snapshot default:
-    * with `changelogCheckpointing.enabled=false`, every commit saves
-    * and fsyncs a FULL snapshot zip of the store, per partition, per
-    * micro-batch — O(state) IO each batch. Measured on q341 at sf0.1
-    * (32 state partitions, multi-column-family TWS store):
-    * `rocksdbCommitFileSyncLatencyMs` 276–849 s summed per batch and
-    * back-to-back walls CLIMBING 22 → 84 → 126 s as the self-induced
-    * fsync storm backed up the block device. With changelog
-    * checkpointing the commit appends an O(delta) changelog (snapshots
-    * amortize to the maintenance thread) — walls 10–15 s, flat. At
-    * 100 TB state the snapshot mode is exactly what you don't run;
-    * changelog is the production RocksDB configuration, and restores
-    * like the provider itself.
-    */
-  def withTwsRocksDb[T](spark: SparkSession)(body: => T): T =
-    withRocksDbProvider(spark, enable = true)(withStreamShuffle(spark)(body))
-
-  /** Fail loud unless the completed query's progress proves RocksDB
-    * actually backed its state stores (the q301 engage check).
-    */
-  def requireRocksDbEngaged(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    require(Option(q.lastProgress).exists(_.json.contains("rocksdb")),
-      "RocksDB state store did not engage — the run would certify the " +
-        "default HDFS-backed provider instead")
+    StreamRun.toMemory(spark, "q301_stream_sessions_rocksdb",
+      sessionFeedCounts(spark, dir), StreamRun.StatePartitions, "complete",
+      rocksDb = true)(_.orderBy("user_id", "w_start"))
 
   /** q311's feed: ONE row per (user, time-quartile) — user_id, the
     * user's MIN event time in the quartile, and the event count —
@@ -1313,30 +979,16 @@ object StreamingEvents {
     */
   def runDedupWithinWatermark(spark: SparkSession, dir: String,
       rocksDb: Boolean = false): DataFrame = {
-    val feed = dedupFeedStaged(spark, dir)
-    val schema = spark.read.parquet(feed).schema
-    val name = s"graft_dedupwm_${runSeq.incrementAndGet()}"
-    val q = withStreamShuffle(spark) { withRocksDbProvider(spark, rocksDb) {
-      val q0 = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .withWatermark("ts", "60 hours")
-        .dropDuplicatesWithinWatermark("user_id")
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q0.awaitTermination()
-      q0
-    } }
-    if (rocksDb) requireRocksDbEngaged(q)
-    StreamingDocs.noteProgress(
-      if (rocksDb) "q328_stream_dedup_expiry_rocksdb"
-      else "q311_stream_dedup_expiry", q)
-    spark.table(name)
-      .select(col("user_id"), unix_micros(col("ts")).as("tu"), col("n"))
-      .orderBy("user_id", "tu")
+    val path = dedupFeedStaged(spark, dir)
+    StreamRun.toMemory(spark,
+        if (rocksDb) "q328_stream_dedup_expiry_rocksdb"
+        else "q311_stream_dedup_expiry",
+        StreamRun.feed(spark, path)
+          .withWatermark("ts", "60 hours")
+          .dropDuplicatesWithinWatermark("user_id"),
+        StreamRun.StatePartitions, "append", rocksDb)(
+      _.select(col("user_id"), unix_micros(col("ts")).as("tu"), col("n"))
+        .orderBy("user_id", "tu"))
   }
 
   /** 4-file TIME-QUARTILE events feed with ascending file mtimes —
@@ -1427,13 +1079,9 @@ object StreamingEvents {
     * finalize, and the oracle must exclude exactly those.
     */
   def lateDataCounts(spark: SparkSession, dir: String): DataFrame = {
-    val feed = stagedLateFeed(spark, dir)
-    val schema = spark.read.parquet(s"$feed/quartile_00.parquet").schema
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed)
-      .withColumn("ts", graft.Tables.eventsTs(schema("ts").dataType))
+    val events = StreamRun.feed(spark, stagedLateFeed(spark, dir))
+    events
+      .withColumn("ts", graft.Tables.eventsTs(events.schema("ts").dataType))
       .withWatermark("ts", "90 minutes")
       .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
@@ -1444,20 +1092,14 @@ object StreamingEvents {
   /** Run [[lateDataCounts]] to completion in APPEND mode (the mode
     * where watermark drop/emission semantics actually bind).
     */
-  def runLateDataToCompletion(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_latefeed_${runSeq.incrementAndGet()}"
-    withStreamShuffle(spark) {
-      val q = lateDataCounts(spark, dir).writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      StreamingDocs.noteProgress("q245_stream_late_data", q)
-    }
-    spark.table(name).orderBy("w", "event_type")
-  }
+  def runLateDataToCompletion(spark: SparkSession, dir: String): DataFrame =
+    StreamRun.toMemory(spark, "q245_stream_late_data", lateDataCounts(spark, dir),
+      StreamRun.StatePartitions, "append")(_.orderBy("w", "event_type"))
 
+  /** The file streaming source requires a directory; the fixture is a
+    * single parquet file — stage a copy under scratch, fingerprint-
+    * keyed and write-once via [[graft.sources.Staging]].
+    */
   private def stagedStreamSource(spark: SparkSession, dir: String): String = {
     val streamDir = graft.sources.Staging.fingerprintPath(
       "graft_stream_src", dir, "events.parquet", "events")
@@ -1475,19 +1117,9 @@ object StreamingEvents {
   /** Run to completion over the (bounded) fixture with AvailableNow and
     * return the complete result — used by the batch-equivalence spec.
     */
-  def runToCompletion(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_${System.identityHashCode(spark)}"
-    withStreamShuffle(spark) {
-      val q = hourlyCounts(spark, dir).writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy("w", "event_type")
-  }
+  def runToCompletion(spark: SparkSession, dir: String): DataFrame =
+    StreamRun.toMemory(spark, "stream_hourly_counts", hourlyCounts(spark, dir),
+      StreamRun.StatePartitions, "complete")(_.orderBy("w", "event_type"))
 
   /** Streaming twin of q136 (grouped Misra–Gries heavy hitters): the
     * `freq_sketch` TypedImperativeAggregate under a streaming
@@ -1507,23 +1139,14 @@ object StreamingEvents {
         .repartition(4)
         .write.mode("overwrite").parquet(feedDir)
     }
-    val schema = spark.read.parquet(feedDir).schema
-    val name = s"graft_hh_${System.identityHashCode(spark)}"
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feedDir)
-      .withColumn("grp", pmod(col("user_id"), lit(16)).cast("long"))
-      .groupBy("grp")
-      .agg(graft.functions.GraftFunctions.freqSketch(col("event_type"), 8).as("sketch"))
-      .writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
-      .select(col("grp"), explode(col("sketch")).as(Seq("item", "est_n")))
-      .orderBy("grp", "item")
+    // keeps the session's partition count: no state-sized scope
+    StreamRun.toMemory(spark, "stream_heavy_hitters",
+        StreamRun.feed(spark, feedDir)
+          .withColumn("grp", pmod(col("user_id"), lit(16)).cast("long"))
+          .groupBy("grp")
+          .agg(graft.functions.GraftFunctions.freqSketch(col("event_type"), 8).as("sketch")),
+        spark.sessionState.conf.numShufflePartitions, "complete")(
+      _.select(col("grp"), explode(col("sketch")).as(Seq("item", "est_n")))
+        .orderBy("grp", "item"))
   }
 }

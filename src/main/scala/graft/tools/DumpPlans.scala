@@ -66,7 +66,7 @@ object DumpPlans {
       // lastProgress is populated (results are report-sized)
       graft.SparkEntry.queries(q)(spark, sf).collect()
       sb.append(s"$q: " +
-        graft.streaming.StreamingDocs.lastProgress.getOrDefault(q, "?") + "\n")
+        graft.streaming.StreamRun.lastProgress.getOrDefault(q, "?") + "\n")
     }
     sb.append("```\n")
     Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)

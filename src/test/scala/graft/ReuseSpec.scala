@@ -104,19 +104,38 @@ class ReuseSpec extends SparkSpec {
     kept.unpersist(blocking = true)
   }
 
-  test("main code keeps cross-query state and pinned-RDD sweeps only in Reuse") {
+  private def mainSources: Seq[(java.io.File, String)] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, root.getAbsolutePath)
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    files(root).filter(_.getName.endsWith(".scala")).map(f =>
+      f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
+  test("main code uses each guarded word only in the one file that owns it") {
+    // cross-query state and pinned-RDD sweeps go through Reuse; every
+    // streaming run starts and reads its source through StreamRun
+    val owner = Map(
+      "TrieMap" -> "Reuse.scala",
+      "getPersistentRDDs" -> "Reuse.scala",
+      "writeStream" -> "StreamRun.scala",
+      "readStream" -> "StreamRun.scala")
     val offenders = for {
-      f <- files(root) if f.getName.endsWith(".scala") && f.getName != "Reuse.scala"
-      text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      word <- Seq("TrieMap", "getPersistentRDDs") if text.contains(word)
-    } yield s"${f.getPath}: $word"
-    assert(offenders.isEmpty,
-      "memoize through Reuse.memo and sweep through Reuse.releasingNew: " +
-        offenders.mkString(", "))
+      (f, text) <- mainSources
+      (word, file) <- owner if f.getName != file && text.contains(word)
+    } yield s"${f.getPath}: $word (belongs in $file)"
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
+
+  test("main code reads exactly the six SPARK_GRAFT_* knobs") {
+    // a new knob fails here until it is added to this list on purpose
+    val knobs = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY",
+      "SPARK_GRAFT_FRESH", "SPARK_GRAFT_SCALE", "SPARK_GRAFT_REFERENCE_SEMANTICS")
+    val found = mainSources.flatMap { case (_, text) =>
+      "SPARK_GRAFT_[A-Z_]+".r.findAllIn(text)
+    }.toSet
+    assert(found === knobs)
   }
 }
 

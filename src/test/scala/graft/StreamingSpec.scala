@@ -1,14 +1,28 @@
 package graft
 
-import graft.streaming.StreamingEvents
+import graft.streaming.{StreamRun, StreamingDocs, StreamingEvents}
 
 /** M4: the watermarked streaming window aggregation must equal its
   * batch form (q24) over the bounded fixture.
   */
 class StreamingSpec extends SparkSpec {
 
+  /** Run a streaming runner and check the progress it records under
+    * `tag`. The single-file sources read their one file in batch 0; the
+    * watermarked append runs add the no-data batch that advances the
+    * watermark.
+    */
+  private def recording[T](tag: String, batches: Int)(run: => T): T = {
+    StreamRun.lastProgress.remove(tag)
+    val out = run
+    val progress = StreamRun.lastProgress.getOrDefault(tag, "")
+    assert(progress.startsWith(s"batches=$batches "), s"$tag: $progress")
+    out
+  }
+
   test("streaming hourly counts ≡ batch q24 (Trigger.AvailableNow)") {
-    val streamed = StreamingEvents.runToCompletion(spark, sf)
+    val streamed = recording("stream_hourly_counts", 1)(
+        StreamingEvents.runToCompletion(spark, sf))
       .collect().map(_.toSeq).toSet
     val batch = run("q24_events_hourly")
       .collect().map(_.toSeq).toSet
@@ -61,7 +75,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming session_window sessions ≡ batch session_window") {
     import org.apache.spark.sql.functions._
-    val streamed = StreamingEvents.runSessionsToCompletion(spark, sf)
+    val streamed = recording("stream_sessions", 1)(
+        StreamingEvents.runSessionsToCompletion(spark, sf))
       .collect().map(_.toSeq).toSet
     val batch = Tables(spark, sf).events
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("win"))
@@ -78,7 +93,8 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     // multiset compare: duplicate emissions are the classic
     // stream-stream join failure mode, and a Set would hide them
-    val streamed = StreamingEvents.runStreamJoinToCompletion(spark, sf)
+    val streamed = recording("stream_interval_join", 2)(
+        StreamingEvents.runStreamJoinToCompletion(spark, sf))
       .collect().map(_.toSeq.toString).sorted.toSeq
     val e = Tables(spark, sf).events
       .select(col("user_id"), col("event_id"), col("ts"))
@@ -96,7 +112,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming dropDuplicatesWithinWatermark ≡ batch dedup (q71)") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val streamed = StreamingEvents.runDedupToCompletion(spark, sf)
+    val streamed = recording("stream_dedup", 2)(
+        StreamingEvents.runDedupToCompletion(spark, sf))
       .groupBy("event_type")
       .agg(count(lit(1)).as("cnt"),
         sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType)
@@ -108,7 +125,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("flatMapGroupsWithState threshold alerts ≡ batch q78") {
-    val streamed = StreamingEvents.thresholdAlerts(spark, sf)
+    val streamed = recording("stream_threshold_alerts", 1)(
+        StreamingEvents.thresholdAlerts(spark, sf))
       .collect().map(_.toSeq).toSet
     val batch = run("q78_threshold_crossings").collect().map(_.toSeq).toSet
     assert(streamed == batch)
@@ -117,7 +135,8 @@ class StreamingSpec extends SparkSpec {
 
   test("mapGroupsWithState per-user aggregates ≡ batch groupBy") {
     import org.apache.spark.sql.functions._
-    val stateful = StreamingEvents.statefulUserCounts(spark, sf)
+    val stateful = recording("stream_user_counts", 1)(
+        StreamingEvents.statefulUserCounts(spark, sf))
       .collect().map(_.toSeq).toSet
     val batch = Tables(spark, sf).events
       .groupBy("user_id")
@@ -129,7 +148,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming SCD2 closed intervals ≡ batch q108 closed rows") {
     import org.apache.spark.sql.functions._
-    val streamed = StreamingEvents.runScd2ToCompletion(spark, sf)
+    val streamed = recording("stream_scd2", 1)(
+        StreamingEvents.runScd2ToCompletion(spark, sf))
       .collect().map(_.toSeq).toSet
     val batch = run("q108_scd2_history")
       .filter(col("valid_to").isNotNull)
@@ -162,7 +182,7 @@ class StreamingSpec extends SparkSpec {
     val first = StreamingEvents.runSessionFeedToCompletion(spark, sf).collect()
     // the feed must actually execute multiple micro-batches — one per
     // time-quartile file — or the session-MERGE state is never crossed
-    val progress = graft.streaming.StreamingDocs.lastProgress
+    val progress = StreamRun.lastProgress
       .getOrDefault("q207_stream_sessions", "")
     assert(progress.contains("batches=4") || progress.contains("batches=5"),
       s"expected a 4-file multi-batch run, got: $progress")
@@ -190,7 +210,7 @@ class StreamingSpec extends SparkSpec {
   test("q212 stream-stream join: multi-batch, cross-quartile pairs survive") {
     import org.apache.spark.sql.functions._
     val rows = StreamingEvents.runStreamFeedJoinToCompletion(spark, sf).collect()
-    val progress = graft.streaming.StreamingDocs.lastProgress
+    val progress = StreamRun.lastProgress
       .getOrDefault("q212_stream_stream_join", "")
     assert(progress.contains("batches="), s"no progress recorded: $progress")
     // batch recompute of the same 24h interval join
@@ -221,28 +241,48 @@ class StreamingSpec extends SparkSpec {
     // a stream-stream join commits 4 state stores per partition per
     // batch; the derived count must (a) stay multi-partition and
     // (b) never exceed the family's per-batch commit budget
-    val fam = StreamingEvents.streamStatePartitions.toInt
-    val join = StreamingEvents.streamJoinStatePartitions.toInt
+    val fam = StreamRun.StatePartitions
+    val join = StreamRun.JoinStatePartitions
     assert(join >= 2, "join state must stay multi-partition")
     assert(join <= math.max(2, fam),
       "join partitions must not exceed the family count")
     assert(join == math.max(2, fam / 4), s"commit leveling: join=$join fam=$fam")
-    // the conf scoping restores the session value even on throw
-    val pkey = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(pkey)
-    intercept[RuntimeException] {
-      StreamingEvents.withStreamShuffle(spark, "3") {
-        assert(spark.conf.get(pkey) === "3")
-        throw new RuntimeException("boom")
+  }
+
+  test("a run whose sink throws restores the shuffle and provider confs") {
+    final class SinkFailed extends RuntimeException("sink failed")
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    val before = keys.map(spark.conf.getOption)
+    var during = Seq.empty[Option[String]]
+    intercept[SinkFailed] {
+      StreamRun.toCompletion(spark, "spec_failing_sink",
+          spark.readStream.format("rate").load(), partitions = 3,
+          rocksDb = true) { _ =>
+        during = keys.map(spark.conf.getOption)
+        throw new SinkFailed
       }
     }
-    assert(spark.conf.get(pkey) === before)
+    assert(during.head.contains("3"))
+    assert(during(1).exists(_.endsWith("RocksDBStateStoreProvider")))
+    assert(during(2).contains("true"))
+    assert(keys.map(spark.conf.getOption) === before)
+  }
+
+  test("memory-sink runs repeat exactly and leave no temp view behind") {
+    val views = spark.catalog.listTables().count()
+    val first = StreamingDocs.runTokenCountsToCompletion(spark, sf).collect().toSeq
+    val second = StreamingDocs.runTokenCountsToCompletion(spark, sf).collect().toSeq
+    assert(first.nonEmpty)
+    assert(second === first)
+    assert(spark.catalog.listTables().count() === views)
   }
 
   test("q215 explicit state: multi-batch fold equals batch scaled sums") {
     import org.apache.spark.sql.functions._
     val rows = StreamingEvents.runExactUserStateToCompletion(spark, sf).collect()
-    val progress = graft.streaming.StreamingDocs.lastProgress
+    val progress = StreamRun.lastProgress
       .getOrDefault("q215_stream_user_state", "")
     assert(progress.contains("batches=4") || progress.contains("batches=5"),
       s"expected a multi-batch run, got: $progress")
@@ -269,7 +309,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val rows = StreamingEvents.runRestartIngestToCompletion(spark, sf).collect()
     // lastProgress holds the SECOND life's record: 2 new quartiles
-    val progress = graft.streaming.StreamingDocs.lastProgress
+    val progress = StreamRun.lastProgress
       .getOrDefault("q227_stream_restart", "")
     assert(progress.contains("batches=2"),
       s"restart should process exactly the 2 new files: $progress")
@@ -282,7 +322,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming EWMA recurrence ≡ batch q114 closed form (6 dp)") {
-    val streamed = StreamingEvents.runEwmaToCompletion(spark, sf)
+    val streamed = recording("stream_ewma", 1)(
+        StreamingEvents.runEwmaToCompletion(spark, sf))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val batch = run("q114_ewma")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
