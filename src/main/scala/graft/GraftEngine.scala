@@ -35,10 +35,11 @@ final class GraftEngine(val spark: SparkSession) {
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
-  /** The hot-path variant: stripe-parallel native column-vector scan
-    * (see [[sources.FastOrcSum]]) — the reference's architecture on
-    * Spark's scheduler. Integer-family first columns only; wraps on
-    * overflow like the reference's `uint64_t` accumulator.
+  /** The hot-path variant: native column-vector scan (see
+    * [[sources.FastOrcSum]]) — the reference's per-reader loop on the
+    * same tasks Spark plans for `spark.read.orc(orcPath)`.
+    * Integer-family first columns only; wraps on overflow like the
+    * reference's `uint64_t` accumulator.
     */
   def sumFirstColumnFast(orcPath: String): Long =
     sources.FastOrcSum.sumFirstLongColumn(spark, orcPath)

@@ -20,8 +20,8 @@ import graft.QueryEntry
   *    for a format Spark has no connector for), snappy-coded blocks;
   *  - read: one task per container file, `DataFileReader` decoding to
   *    rows. Avro files are block-splittable; at 100 TB the read side
-  *    would enumerate block-aligned splits exactly like
-  *    [[FastOrcSum.stripeSplits]] does for ORC stripes (per-file tasks
+  *    would cut files into byte ranges exactly like
+  *    [[FastOrcSum.scanTasks]] does for ORC (per-file tasks
   *    are the fixture-scale simplification of the same shape, and the
   *    write side already yields one file per upstream partition, so
   *    file count scales with the cluster).

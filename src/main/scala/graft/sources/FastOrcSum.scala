@@ -1,15 +1,20 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.hive.ql.exec.vector.{DoubleColumnVector, LongColumnVector}
 import org.apache.hadoop.hive.ql.io.sarg.{PredicateLeaf, SearchArgumentFactory}
 import org.apache.orc.{OrcFile, Reader, TypeDescription}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, PartitionDirectory}
 
-/** The reference program's architecture, verbatim, on Spark's
-  * scheduler: stripe-aligned splits (`reader.cc:104-144`), one
-  * independent ORC reader per task (`reader.cc:34-44`), 10k-row
+import scala.reflect.ClassTag
+
+/** The reference program's architecture on Spark's scheduler: one
+  * independent ORC reader per byte range (`reader.cc:34-44`), 10k-row
   * vectorized batches (`reader.cc:43-44`), null-aware per-task partial
   * sums (`reader.cc:60-63`) merged by a final reduce
   * (`reader.cc:156-160`) — built on the public Apache ORC Java library
@@ -34,61 +39,141 @@ import org.apache.spark.sql.SparkSession
   * rows-actually-scanned count surfaced so stride skipping is
   * measurable, not asserted.
   *
-  * Scale: one task per stripe — identical decomposition to
-  * FileSourceScanExec's stripe-aligned splits, so 100 TB = ~1 task per
-  * stripe exactly like the built-in scan; partial sums are Longs
-  * (the reference wraps `uint64_t` on overflow, `reader.cc:22` —
-  * same wrap semantics here, documented divergence from SQL ANSI).
+  * Scale: planning is [[scanTasks]], FileSourceScanExec's own split
+  * rule — one listing, byte ranges of at most
+  * `FilePartition.maxSplitBytes`, packed into tasks by
+  * `FilePartition.getFilePartitions` — so the native job runs exactly
+  * the tasks `spark.read.orc(path)` runs, and no footer is read on the
+  * driver beyond the first file's type check. The ORC reader reads the
+  * stripes that start inside a range, so ranges tile each file and
+  * every stripe is read once. Partial sums are Longs (the reference
+  * wraps `uint64_t` on overflow, `reader.cc:22` — same wrap semantics
+  * here, documented divergence from SQL ANSI).
   */
 object FastOrcSum {
 
-  final case class StripeSplit(file: String, offset: Long, length: Long)
-
-  /** Enumerate stripe-aligned splits (footer-only reads, driver-side —
-    * the same metadata pass as `reader.cc:99-112`'s planning step).
-    * Paths resolve through the session's Hadoop filesystem, so any
-    * supported scheme (file://, hdfs://, s3a://) works.
+  /** A byte range of one ORC file; a reader over it reads exactly the
+    * stripes that start inside it (`Reader.Options.range`).
     */
-  def stripeSplits(spark: SparkSession, path: String): Seq[StripeSplit] = {
-    val conf = spark.sessionState.newHadoopConf()
+  final case class OrcRange(file: String, offset: Long, length: Long)
+
+  /** The ORC files of `path`, from one listing: the `.orc` files of a
+    * directory in name order, or `path` itself when it is a file.
+    */
+  private def listOrc(conf: Configuration, path: String): Seq[FileStatus] = {
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    val files =
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).map(_.getPath)
-          .filter(_.getName.endsWith(".orc")).sortBy(_.toString).toSeq
-      else Seq(root)
-    files.flatMap { f =>
-      val reader = OrcFile.createReader(f, OrcFile.readerOptions(conf))
-      try {
+    val st = fs.getFileStatus(root)
+    if (st.isDirectory)
+      fs.listStatus(root).filter(_.getPath.getName.endsWith(".orc"))
+        .sortBy(_.getPath.toString).toSeq
+    else Seq(st)
+  }
+
+  /** The scan's tasks, each a list of byte ranges, planned from one
+    * listing with Spark's file-scan rule (the non-bucketed branch of
+    * `FileSourceScanExec.createReadRDD`): split size from
+    * `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and the
+    * leaf parallelism, ranges largest first, packed next-fit. The
+    * result has as many tasks as `spark.read.orc(path)`'s scan. Paths
+    * resolve through the session's Hadoop filesystem, so any supported
+    * scheme (file://, hdfs://, s3a://) works.
+    */
+  def scanTasks(spark: SparkSession, path: String): Seq[Seq[OrcRange]] =
+    packed(spark, listOrc(spark.sessionState.newHadoopConf(), path))
+
+  private def packed(spark: SparkSession, files: Seq[FileStatus]): Seq[Seq[OrcRange]] = {
+    val listed = files.map(FileStatusWithMetadata(_))
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      Seq(PartitionDirectory(InternalRow.empty, listed)))
+    val pieces = listed
+      .flatMap(f => PartitionedFileUtil.splitFiles(f, f.getPath,
+        isSplitable = true, maxSplit, InternalRow.empty))
+      .sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(spark, pieces, maxSplit).map(
+      _.files.toSeq.map(p => OrcRange(p.toPath.toString, p.start, p.length)))
+  }
+
+  /** One range per stripe (footer reads on the driver, the metadata
+    * pass of `reader.cc:99-112`). Not on any query path: the
+    * reader-parallelism sweep (`graft.Sweep`) and perfbench group these
+    * themselves.
+    */
+  def stripeSplits(spark: SparkSession, path: String): Seq[OrcRange] = {
+    val conf = spark.sessionState.newHadoopConf()
+    listOrc(conf, path).flatMap { f =>
+      withReader(conf, f.getPath.toString) { reader =>
         import scala.jdk.CollectionConverters._
         reader.getStripes.asScala.map(s =>
-          StripeSplit(f.toString, s.getOffset, s.getLength)).toSeq
-      } finally reader.close()
+          OrcRange(f.getPath.toString, s.getOffset, s.getLength)).toSeq
+      }
     }
   }
+
+  /** Open one ORC reader on `file`, run `read`, close it. */
+  private def withReader[T](conf: Configuration, file: String)(read: Reader => T): T = {
+    val reader = OrcFile.createReader(new Path(file), OrcFile.readerOptions(conf))
+    try read(reader) finally reader.close()
+  }
+
+  /** One Spark task per planned partition, running `body` over its
+    * ranges with the session's Hadoop configuration.
+    */
+  private def onTasks[T: ClassTag](spark: SparkSession, tasks: Seq[Seq[OrcRange]])(
+      body: (Configuration, Seq[OrcRange]) => Iterator[T]): RDD[T] = {
+    val hconf = org.apache.spark.sql.graft.Shims.broadcastHadoopConf(spark)
+    spark.sparkContext.parallelize(tasks, math.max(1, tasks.size))
+      .flatMap(body(hconf.conf, _))
+  }
+
+  /** Run `read` over every range of `tasks`, one reader per range, in
+    * range order within a task. `read` returns its rows materialized:
+    * the reader closes when it returns.
+    */
+  def readRanges[T: ClassTag](spark: SparkSession, tasks: Seq[Seq[OrcRange]])(
+      read: (Reader, OrcRange) => Iterable[T]): RDD[T] =
+    onTasks(spark, tasks)((conf, ranges) =>
+      ranges.iterator.flatMap(r => withReader(conf, r.file)(read(_, r))))
 
   import TypeDescription.Category
   private val LongFamily: Set[Category] =
     Set(Category.BOOLEAN, Category.BYTE, Category.SHORT, Category.INT, Category.LONG)
   private val DoubleFamily: Set[Category] = Set(Category.FLOAT, Category.DOUBLE)
 
-  private def firstColCategory(spark: SparkSession, path: String): Category = {
+  /** Plan `path` and check its first file's first column on the driver
+    * (the one footer read; callers intercept the
+    * `IllegalArgumentException`). An input without `.orc` files plans
+    * no tasks and skips the check.
+    */
+  private def typedTasks(spark: SparkSession, path: String, family: Set[Category],
+      mismatch: Category => String): Seq[Seq[OrcRange]] = {
     val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val f =
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).map(_.getPath).filter(_.getName.endsWith(".orc"))
-          .minBy(_.toString)
-      else root
-    val reader = OrcFile.createReader(f, OrcFile.readerOptions(conf))
-    try reader.getSchema.getChildren.get(0).getCategory
-    finally reader.close()
+    val files = listOrc(conf, path)
+    files.headOption.foreach { f =>
+      val cat = withReader(conf, f.getPath.toString)(
+        _.getSchema.getChildren.get(0).getCategory)
+      require(family.contains(cat), mismatch(cat))
+    }
+    packed(spark, files)
   }
 
-  /** SUM of the first column (integer family) across all stripes, one
-    * task per stripe. Fails loudly on non-integer first columns — use
+  /** Sum `perRange` over every range, one Spark task per planned
+    * partition; the tasks' own time goes to [[graft.metrics.NativeScanTime]].
+    */
+  private def sumTasks[T](spark: SparkSession, tasks: Seq[Seq[OrcRange]],
+      zero: T)(perRange: (Configuration, OrcRange) => T)(add: (T, T) => T): T = {
+    if (tasks.isEmpty) return zero
+    val (sum, nanos) = onTasks(spark, tasks) { (conf, ranges) =>
+      val t0 = System.nanoTime()
+      val s = ranges.foldLeft(zero)((acc, r) => add(acc, perRange(conf, r)))
+      Iterator.single((s, System.nanoTime() - t0))
+    }.reduce((a, b) => (add(a._1, b._1), a._2 + b._2))
+    graft.metrics.NativeScanTime.addNanos(nanos)
+    sum
+  }
+
+  /** SUM of the first column (integer family) across all stripes.
+    * Fails loudly on non-integer first columns — use
     * [[sumFirstDoubleColumn]] for FLOAT/DOUBLE.
     */
   def sumFirstLongColumn(spark: SparkSession, path: String): Long =
@@ -103,156 +188,112 @@ object FastOrcSum {
     */
   def sumFirstLongColumnFiltered(spark: SparkSession, path: String,
       range: Option[(Long, Long)]): (Long, Long) = {
-    val cat = firstColCategory(spark, path)
-    require(LongFamily.contains(cat),
+    val tasks = typedTasks(spark, path, LongFamily, cat =>
       s"sumFirstLongColumn: first column is $cat, not an integer family — " +
         "use sumFirstDoubleColumn for FLOAT/DOUBLE")
-    val splits = stripeSplits(spark, path)
-    if (splits.isEmpty) return (0L, 0L)
-    val hconf = org.apache.spark.sql.graft.Shims.broadcastHadoopConf(spark)
-    val (sum, rows, nanos) = spark.sparkContext
-      .parallelize(splits, splits.size)
-      .map { s =>
-        val t0 = System.nanoTime()
-        val conf: Configuration = hconf.conf
-        val reader = OrcFile.createReader(new Path(s.file), OrcFile.readerOptions(conf))
-        try {
-          val schema = reader.getSchema
-          val opts = scanOptions(reader, schema, s)
-          range.foreach { case (lo, hi) =>
-            val colName = schema.getFieldNames.get(0)
-            opts.searchArgument(
-              SearchArgumentFactory.newBuilder()
-                .startAnd()
-                .between(colName, PredicateLeaf.Type.LONG,
-                  java.lang.Long.valueOf(lo), java.lang.Long.valueOf(hi))
-                .end().build(),
-              Array(colName))
-          }
-          val rowsIt = reader.rows(opts)
-          try {
-            val batch = schema.createRowBatch(10000)
-            val col = batch.cols(0).asInstanceOf[LongColumnVector]
-            var sum = 0L
-            var seen = 0L
-            val (lo, hi) = range.getOrElse((Long.MinValue, Long.MaxValue))
-            while (rowsIt.nextBatch(batch)) {
-              val n = batch.size
-              seen += n
-              if (col.isRepeating) {
-                if ((col.noNulls || !col.isNull(0))
-                  && col.vector(0) >= lo && col.vector(0) <= hi)
-                  sum += col.vector(0) * n
-              } else {
-                var i = 0
-                while (i < n) {
-                  if ((col.noNulls || !col.isNull(i))
-                    && col.vector(i) >= lo && col.vector(i) <= hi)
-                    sum += col.vector(i)
-                  i += 1
-                }
-              }
-            }
-            (sum, seen, System.nanoTime() - t0)
-          } finally rowsIt.close()
-        } finally reader.close()
-      }
-      .reduce((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
-    graft.metrics.NativeScanTime.addNanos(nanos)
-    (sum, rows)
+    sumTasks(spark, tasks, (0L, 0L))(sumLongRange(_, _, range))(
+      (a, b) => (a._1 + b._1, a._2 + b._2))
   }
 
   /** SUM of the first column (FLOAT/DOUBLE) across all stripes —
     * closes the path where the long variant previously CCE'd.
     */
   def sumFirstDoubleColumn(spark: SparkSession, path: String): Double = {
-    val cat = firstColCategory(spark, path)
-    require(DoubleFamily.contains(cat),
+    val tasks = typedTasks(spark, path, DoubleFamily, cat =>
       s"sumFirstDoubleColumn: first column is $cat, not FLOAT/DOUBLE — " +
         "use sumFirstLongColumn for integer families")
-    val splits = stripeSplits(spark, path)
-    if (splits.isEmpty) return 0.0
-    val hconf = org.apache.spark.sql.graft.Shims.broadcastHadoopConf(spark)
-    val (sum, nanos) = spark.sparkContext
-      .parallelize(splits, splits.size)
-      .map { s =>
-        val t0 = System.nanoTime()
-        val conf: Configuration = hconf.conf
-        val reader = OrcFile.createReader(new Path(s.file), OrcFile.readerOptions(conf))
-        try {
-          val schema = reader.getSchema
-          val rowsIt = reader.rows(scanOptions(reader, schema, s))
-          try {
-            val batch = schema.createRowBatch(10000)
-            val col = batch.cols(0).asInstanceOf[DoubleColumnVector]
-            var sum = 0.0
-            while (rowsIt.nextBatch(batch)) {
-              val n = batch.size
-              if (col.isRepeating) {
-                if (col.noNulls || !col.isNull(0)) sum += col.vector(0) * n
-              } else if (col.noNulls) {
-                var i = 0
-                while (i < n) { sum += col.vector(i); i += 1 }
-              } else {
-                var i = 0
-                while (i < n) {
-                  if (!col.isNull(i)) sum += col.vector(i)
-                  i += 1
-                }
-              }
-            }
-            (sum, System.nanoTime() - t0)
-          } finally rowsIt.close()
-        } finally reader.close()
-      }
-      .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-    graft.metrics.NativeScanTime.addNanos(nanos)
-    sum
+    sumTasks(spark, tasks, 0.0)(sumDoubleRange)(_ + _)
   }
 
-  /** Sum the first (integer-family) column across a set of stripe
-    * splits with one sequential reader per stripe — the per-task body
-    * shared by [[sumFirstLongColumn]]-style callers and the
-    * reader-parallelism sweep (`graft.Sweep`), so the sweep measures
-    * exactly the operator's loop.
+  /** Sum the first (integer-family) column across a set of ranges with
+    * one sequential reader per range — the per-range loop of
+    * [[sumFirstLongColumn]], which the reader-parallelism sweep
+    * (`graft.Sweep`) and perfbench time on their own groupings.
     */
-  def sumLongStripes(conf: Configuration, splits: Seq[StripeSplit]): Long = {
-    var total = 0L
-    splits.foreach { sp =>
-      val reader = OrcFile.createReader(new Path(sp.file), OrcFile.readerOptions(conf))
+  def sumLongStripes(conf: Configuration, splits: Seq[OrcRange]): Long =
+    splits.foldLeft(0L)((acc, r) => acc + sumLongRange(conf, r, None)._1)
+
+  /** (sum, rows delivered) of the first column over one range, with
+    * an optional [lo, hi] predicate pushed as a SearchArgument and
+    * re-applied per row.
+    */
+  private def sumLongRange(conf: Configuration, r: OrcRange,
+      range: Option[(Long, Long)]): (Long, Long) = withReader(conf, r.file) { reader =>
+    val schema = reader.getSchema
+    val opts = firstColumnOptions(reader, schema, r)
+    range.foreach { case (lo, hi) =>
+      val colName = schema.getFieldNames.get(0)
+      opts.searchArgument(
+        SearchArgumentFactory.newBuilder()
+          .startAnd()
+          .between(colName, PredicateLeaf.Type.LONG,
+            java.lang.Long.valueOf(lo), java.lang.Long.valueOf(hi))
+          .end().build(),
+        Array(colName))
+    }
+    val rowsIt = reader.rows(opts)
+    try {
+      val batch = schema.createRowBatch(10000)
+      val col = batch.cols(0).asInstanceOf[LongColumnVector]
+      val (lo, hi) = range.getOrElse((Long.MinValue, Long.MaxValue))
+      var sum = 0L
+      var seen = 0L
+      while (rowsIt.nextBatch(batch)) {
+        val n = batch.size
+        val v = col.vector
+        seen += n
+        if (col.isRepeating) {
+          if ((col.noNulls || !col.isNull(0)) && v(0) >= lo && v(0) <= hi)
+            sum += v(0) * n
+        } else if (col.noNulls && range.isEmpty) {
+          var i = 0
+          while (i < n) { sum += v(i); i += 1 }
+        } else {
+          var i = 0
+          while (i < n) {
+            if ((col.noNulls || !col.isNull(i)) && v(i) >= lo && v(i) <= hi)
+              sum += v(i)
+            i += 1
+          }
+        }
+      }
+      (sum, seen)
+    } finally rowsIt.close()
+  }
+
+  private def sumDoubleRange(conf: Configuration, r: OrcRange): Double =
+    withReader(conf, r.file) { reader =>
+      val schema = reader.getSchema
+      val rowsIt = reader.rows(firstColumnOptions(reader, schema, r))
       try {
-        val schema = reader.getSchema
-        val rowsIt = reader.rows(scanOptions(reader, schema, sp))
-        try {
-          val batch = schema.createRowBatch(10000)
-          val col = batch.cols(0).asInstanceOf[LongColumnVector]
-          while (rowsIt.nextBatch(batch)) {
-            val n = batch.size
-            if (col.isRepeating) {
-              if (col.noNulls || !col.isNull(0)) total += col.vector(0) * n
-            } else if (col.noNulls) {
-              var i = 0
-              while (i < n) { total += col.vector(i); i += 1 }
-            } else {
-              var i = 0
-              while (i < n) {
-                if (!col.isNull(i)) total += col.vector(i)
-                i += 1
-              }
+        val batch = schema.createRowBatch(10000)
+        val col = batch.cols(0).asInstanceOf[DoubleColumnVector]
+        var sum = 0.0
+        while (rowsIt.nextBatch(batch)) {
+          val n = batch.size
+          if (col.isRepeating) {
+            if (col.noNulls || !col.isNull(0)) sum += col.vector(0) * n
+          } else if (col.noNulls) {
+            var i = 0
+            while (i < n) { sum += col.vector(i); i += 1 }
+          } else {
+            var i = 0
+            while (i < n) {
+              if (!col.isNull(i)) sum += col.vector(i)
+              i += 1
             }
           }
-        } finally rowsIt.close()
-      } finally reader.close()
+        }
+        sum
+      } finally rowsIt.close()
     }
-    total
-  }
 
-  /** Shared per-stripe read options: first-column projection only. */
-  private def scanOptions(reader: Reader, schema: TypeDescription,
-      s: StripeSplit): Reader.Options = {
+  /** Shared per-range read options: first-column projection only. */
+  private def firstColumnOptions(reader: Reader, schema: TypeDescription,
+      r: OrcRange): Reader.Options = {
     val include = new Array[Boolean](schema.getMaximumId + 1)
     include(0) = true
     include(schema.getChildren.get(0).getId) = true
-    reader.options().range(s.offset, s.length).include(include)
+    reader.options().range(r.offset, r.length).include(include)
   }
 }

@@ -264,7 +264,7 @@ object OrcRoundTrip {
     },
 
     // The native path's double-column branch under the gate: an ORC
-    // copy with l_quantity leading, summed by the stripe-parallel
+    // copy with l_quantity leading, summed by the range-parallel
     // DoubleColumnVector loop. l_quantity is integral-valued, so the
     // double partial sums are exact and order-free — the oracle's SUM
     // matches bit-for-bit (the same reasoning as q01's long path).
@@ -341,7 +341,7 @@ object OrcRoundTrip {
           sum("l_quantity").as("sum_qty"), count(lit(1)).as("cnt"))
     },
 
-    // The reference program through the hot path: stripe-parallel
+    // The reference program through the hot path: range-parallel
     // native column-vector scan (FastOrcSum) over the ORC copy — the
     // custom operator itself sits under the DuckDB gate (oracle runs
     // the same sum on the parquet source).

@@ -15,7 +15,8 @@ import graft.QueryEntry
   * rejects union files outright ([[TimestampInstantOrc.builtinUnreadableCategories]]
   * names it; `OrcInstantSpec` pins the rejection), so support goes
   * through the ORC core library like [[TimestampInstantOrc]]:
-  * per-partition core writers, one read task per stripe, and the
+  * per-partition core writers, reads planned like Spark's own file
+  * scans ([[FastOrcSum.scanTasks]]), and the
   * union decoded to Spark's natural relational encoding — a `tag`
   * discriminator plus one nullable column per branch (exactly how
   * Hive's union_to_struct UDF and Trino expose it; a true sum type
@@ -91,61 +92,55 @@ object OrcUnionType {
 
   /** Read a union-typed ORC directory back as (id, tag, int_val,
     * str_val) — tag discriminates, the non-selected branch is null.
-    * One task per stripe.
+    * Tasks as [[FastOrcSum.scanTasks]] plans them, one reader per range.
     */
   def readUnion(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val splits = FastOrcSum.stripeSplits(spark, path)
-    require(splits.nonEmpty, s"no ORC stripes under $path")
-    val hconf = org.apache.spark.sql.graft.Shims.broadcastHadoopConf(spark)
-    spark.sparkContext
-      .parallelize(splits, splits.size)
-      .flatMap { s =>
-        val conf: Configuration = hconf.conf
-        val reader = OrcFile.createReader(new Path(s.file), OrcFile.readerOptions(conf))
-        val schema = reader.getSchema
-        require(schema.toString == UnionSchema,
-          s"unexpected union-file schema: $schema")
-        val rowsIt = reader.rows(reader.options().range(s.offset, s.length))
-        val batch = schema.createRowBatch(10000)
-        val idv = batch.cols(0).asInstanceOf[LongColumnVector]
-        val uv = batch.cols(1).asInstanceOf[UnionColumnVector]
-        val ints = uv.fields(0).asInstanceOf[LongColumnVector]
-        val strs = uv.fields(1).asInstanceOf[BytesColumnVector]
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Int, Option[Long], Option[String])]
-        try {
-          while (rowsIt.nextBatch(batch)) {
-            // decode guards: the schema require() limits this reader to
-            // the staged layout, but a foreign file matching the schema
-            // could still carry nulls or run-length (isRepeating)
-            // batches this dense decode would silently misread as
-            // garbage tags/values — fail loudly instead
-            require(idv.noNulls && !idv.isRepeating && uv.noNulls && !uv.isRepeating,
-              s"${s.file}: nulls or repeating batches in union column — unsupported")
-            require(!ints.isRepeating && !strs.isRepeating,
-              s"${s.file}: repeating union branch vectors — unsupported")
-            var i = 0
-            while (i < batch.size) {
-              val tag = uv.tags(i)
-              require(
-                if (tag == 0) ints.noNulls || !ints.isNull(i)
-                else strs.noNulls || !strs.isNull(i),
-                s"${s.file}: null in selected union branch at row $i — unsupported")
-              out += ((idv.vector(i), tag,
-                if (tag == 0) Some(ints.vector(i)) else None,
-                if (tag == 1) Some(strs.toString(i)) else None))
-              i += 1
-            }
+    val tasks = FastOrcSum.scanTasks(spark, path)
+    require(tasks.nonEmpty, s"no ORC files under $path")
+    FastOrcSum.readRanges(spark, tasks) { (reader, r) =>
+      val schema = reader.getSchema
+      require(schema.toString == UnionSchema,
+        s"unexpected union-file schema: $schema")
+      val rowsIt = reader.rows(reader.options().range(r.offset, r.length))
+      val batch = schema.createRowBatch(10000)
+      val idv = batch.cols(0).asInstanceOf[LongColumnVector]
+      val uv = batch.cols(1).asInstanceOf[UnionColumnVector]
+      val ints = uv.fields(0).asInstanceOf[LongColumnVector]
+      val strs = uv.fields(1).asInstanceOf[BytesColumnVector]
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Int, Option[Long], Option[String])]
+      try {
+        while (rowsIt.nextBatch(batch)) {
+          // decode guards: the schema require() limits this reader to
+          // the staged layout, but a foreign file matching the schema
+          // could still carry nulls or run-length (isRepeating)
+          // batches this dense decode would silently misread as
+          // garbage tags/values — fail loudly instead
+          require(idv.noNulls && !idv.isRepeating && uv.noNulls && !uv.isRepeating,
+            s"${r.file}: nulls or repeating batches in union column — unsupported")
+          require(!ints.isRepeating && !strs.isRepeating,
+            s"${r.file}: repeating union branch vectors — unsupported")
+          var i = 0
+          while (i < batch.size) {
+            val tag = uv.tags(i)
+            require(
+              if (tag == 0) ints.noNulls || !ints.isNull(i)
+              else strs.noNulls || !strs.isNull(i),
+              s"${r.file}: null in selected union branch at row $i — unsupported")
+            out += ((idv.vector(i), tag,
+              if (tag == 0) Some(ints.vector(i)) else None,
+              if (tag == 1) Some(strs.toString(i)) else None))
+            i += 1
           }
-        } finally { rowsIt.close(); reader.close() }
-        out
-      }
-      .toDF("id", "tag", "int_val", "str_val")
+        }
+      } finally rowsIt.close()
+      out
+    }.toDF("id", "tag", "int_val", "str_val")
   }
 
   val entries: Seq[QueryEntry] = Seq(
-    // Parquet lineitem -> union ORC (core writer) -> stripe-parallel
+    // Parquet lineitem -> union ORC (core writer) -> range-parallel
     // core read -> per-branch aggregates; the oracle recomputes branch
     // routing and both encodings from the parquet source.
     QueryEntry.sql(

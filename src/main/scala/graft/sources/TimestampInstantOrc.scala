@@ -25,8 +25,9 @@ import graft.QueryEntry
   *  - write: one ORC core writer per Spark partition (`mapPartitions`,
   *    the documented last-resort seam — no Catalyst expression can
   *    emit a type Spark's own writer cannot represent);
-  *  - read: one task per stripe over [[FastOrcSum.stripeSplits]],
-  *    decoding the TimestampColumnVector to epoch micros.
+  *  - read: the tasks [[FastOrcSum.scanTasks]] plans, as Spark's own
+  *    file scans would, decoding the TimestampColumnVector to epoch
+  *    micros.
   *
   * INSTANT semantics make the round-trip timezone-independent by
   * construction: the column vector carries epoch millis + nanos, and
@@ -36,7 +37,8 @@ import graft.QueryEntry
   * reader gets back.
   *
   * Scale: writers are per-partition and writer-local (no driver
-  * funnel); readers are per-stripe like every other ORC scan here.
+  * funnel); reads are split by byte range like every other ORC scan
+  * here.
   * The q162 gate aggregates to a scalar row, so the oracle comparison
   * is order-insensitive.
   */
@@ -47,7 +49,7 @@ object TimestampInstantOrc {
 
   /** events (event_id, ts) staged as a multi-file TIMESTAMP_INSTANT
     * ORC directory — fingerprint-keyed and write-once like every other
-    * derived fixture copy. 4 partitions so the stripe-parallel read
+    * derived fixture copy. 4 partitions so the range-parallel read
     * path genuinely fans out on the fixture.
     */
   def stagedInstantCopy(spark: SparkSession, dir: String): String = {
@@ -101,46 +103,41 @@ object TimestampInstantOrc {
   }
 
   /** Read a TIMESTAMP_INSTANT ORC directory back as (event_id, tus
-    * epoch-micros) — one task per stripe, ORC core reader per task.
+    * epoch-micros) — tasks as [[FastOrcSum.scanTasks]] plans them, one
+    * ORC core reader per range.
     */
   def readInstantMicros(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val splits = FastOrcSum.stripeSplits(spark, path)
-    require(splits.nonEmpty, s"no ORC stripes under $path")
-    val hconf = org.apache.spark.sql.graft.Shims.broadcastHadoopConf(spark)
-    spark.sparkContext
-      .parallelize(splits, splits.size)
-      .flatMap { s =>
-        val conf: Configuration = hconf.conf
-        val reader = OrcFile.createReader(new Path(s.file), OrcFile.readerOptions(conf))
-        val schema = reader.getSchema
-        require(schema.toString == InstantSchema,
-          s"unexpected instant-file schema: $schema")
-        val rowsIt = reader.rows(reader.options().range(s.offset, s.length))
-        val batch = schema.createRowBatch(10000)
-        val idv = batch.cols(0).asInstanceOf[LongColumnVector]
-        val tsv = batch.cols(1).asInstanceOf[TimestampColumnVector]
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        try {
-          while (rowsIt.nextBatch(batch)) {
-            // decode guards (mirror of OrcUnionType.readUnion): a
-            // foreign schema-matching file with nulls or run-length
-            // batches would be silently misdecoded by this dense loop
-            require(idv.noNulls && !idv.isRepeating && tsv.noNulls && !tsv.isRepeating,
-              s"${s.file}: nulls or repeating batches in instant file — unsupported")
-            var i = 0
-            while (i < batch.size) {
-              // millis + nanos-of-second -> micros (nanos INCLUDES the
-              // sub-second part of time(), so derive seconds first)
-              val us = Math.floorDiv(tsv.time(i), 1000L) * 1000000L + tsv.nanos(i) / 1000L
-              out += ((idv.vector(i), us))
-              i += 1
-            }
+    val tasks = FastOrcSum.scanTasks(spark, path)
+    require(tasks.nonEmpty, s"no ORC files under $path")
+    FastOrcSum.readRanges(spark, tasks) { (reader, r) =>
+      val schema = reader.getSchema
+      require(schema.toString == InstantSchema,
+        s"unexpected instant-file schema: $schema")
+      val rowsIt = reader.rows(reader.options().range(r.offset, r.length))
+      val batch = schema.createRowBatch(10000)
+      val idv = batch.cols(0).asInstanceOf[LongColumnVector]
+      val tsv = batch.cols(1).asInstanceOf[TimestampColumnVector]
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      try {
+        while (rowsIt.nextBatch(batch)) {
+          // decode guards (mirror of OrcUnionType.readUnion): a
+          // foreign schema-matching file with nulls or run-length
+          // batches would be silently misdecoded by this dense loop
+          require(idv.noNulls && !idv.isRepeating && tsv.noNulls && !tsv.isRepeating,
+            s"${r.file}: nulls or repeating batches in instant file — unsupported")
+          var i = 0
+          while (i < batch.size) {
+            // millis + nanos-of-second -> micros (nanos INCLUDES the
+            // sub-second part of time(), so derive seconds first)
+            val us = Math.floorDiv(tsv.time(i), 1000L) * 1000000L + tsv.nanos(i) / 1000L
+            out += ((idv.vector(i), us))
+            i += 1
           }
-        } finally { rowsIt.close(); reader.close() }
-        out
-      }
-      .toDF("event_id", "tus")
+        }
+      } finally rowsIt.close()
+      out
+    }.toDF("event_id", "tus")
   }
 
   /** Footer-only preflight: the ORC type categories in `path`'s schema
@@ -176,7 +173,7 @@ object TimestampInstantOrc {
 
   val entries: Seq[QueryEntry] = Seq(
     // Parquet events -> TIMESTAMP_INSTANT ORC (core writer, per
-    // partition) -> stripe-parallel core read -> scalar aggregates over
+    // partition) -> range-parallel core read -> scalar aggregates over
     // the decoded epoch micros. The oracle recomputes from the parquet
     // source, so a match proves the INSTANT encode/decode is
     // value-preserving down to the microsecond (sum_frac_us isolates

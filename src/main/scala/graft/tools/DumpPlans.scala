@@ -19,9 +19,14 @@ object DumpPlans {
     // scan over the state store, a physical plan worth auditing.
     "q341_stream_tws_profile", "q342_stream_tws_timers")
 
+  /** Usage: `runMain graft.tools.DumpPlans <sf-dir> [out.md]`; the
+    * output defaults to `PLANS.md` in the working directory.
+    */
   def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: DumpPlans <sf-dir> [out.md]")
+    val sf = args(0)
+    val out = Paths.get(args.lift(1).getOrElse("PLANS.md"))
     val spark = graft.EngineSession.local("plans", "8")
-    val sf = "/root/testdata/sf0.001"
     // Every declared entry gets a plan section (r10 VERDICT item 7:
     // the plan audit must be uniform across the inventory) — derived
     // from the registry, so a new query can never be forgotten here.
@@ -30,8 +35,8 @@ object DumpPlans {
     val picks = graft.SparkEntry.allEntries.map(_.name)
       .filterNot(streamingPicks.contains).sorted
     val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans (sf0.001, generated by tools/DumpPlans)\n\n")
-    sb.append("Regenerate: `sbt \"runMain graft.tools.DumpPlans\"`. The shapes these show\n")
+    sb.append(s"# PLANS — formatted physical plans (${Paths.get(sf).getFileName}, generated by tools/DumpPlans)\n\n")
+    sb.append("Regenerate: `sbt \"runMain graft.tools.DumpPlans <sf-dir>\"`. The shapes these show\n")
     sb.append("are argued in PERF_NOTES.md; highlights: PushedFilters/ReadSchema on every\n")
     sb.append("scan, BroadcastHashJoin for dims, partial/final HashAggregate pairs,\n")
     sb.append("TakeOrderedAndProject for top-k, single keyed Window pass for the as-of join.\n")
@@ -69,8 +74,8 @@ object DumpPlans {
         graft.streaming.StreamRun.lastProgress.getOrDefault(q, "?") + "\n")
     }
     sb.append("```\n")
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
-    println("written " + sb.length)
+    Files.writeString(out, sb.toString)
+    println(s"written ${sb.length} chars to ${out.toAbsolutePath}")
     spark.stop()
   }
 }

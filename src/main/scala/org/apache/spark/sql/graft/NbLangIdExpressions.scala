@@ -64,8 +64,7 @@ object CharBigramCounts {
       if (i > 0) {
         // bigram = previous char + this char, by raw UTF-8 bytes
         val bg = UTF8String.fromBytes(bytes, prevStart, end - prevStart)
-        val prev = m.get(bg)
-        m.put(bg, if (prev == null) 1L else prev + 1L)
+        m.put(bg, m.getOrDefault(bg, 0L) + 1L)
       }
       prevStart = i
       i = end

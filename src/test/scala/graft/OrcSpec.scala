@@ -297,6 +297,74 @@ class OrcSpec extends SparkSpec {
     assert(rowsScanned < total / 2, s"scanned $rowsScanned of $total rows — no skipping")
   }
 
+  test("FastOrcSum on empty input: no .orc file and a zero-row file both sum to 0") {
+    import graft.sources.FastOrcSum
+    import org.apache.hadoop.fs.Path
+    import org.apache.orc.{OrcFile, TypeDescription}
+    val root = new Path(s"${sys.props("java.io.tmpdir")}/graft_orc_empty_spec")
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = root.getFileSystem(conf)
+    fs.delete(root, true)
+    val bare = new Path(root, "bare")
+    fs.mkdirs(bare)
+    fs.create(new Path(bare, "_SUCCESS")).close()
+    assert(FastOrcSum.sumFirstLongColumn(spark, bare.toString) == 0L)
+    assert(FastOrcSum.sumFirstLongColumnFiltered(spark, bare.toString, Some((1L, 9L))) == ((0L, 0L)))
+    assert(FastOrcSum.sumFirstDoubleColumn(spark, bare.toString) == 0.0)
+    for ((name, schema) <- Seq("long" -> "struct<k:bigint>", "double" -> "struct<d:double>")) {
+      OrcFile.createWriter(new Path(root, s"$name/part-00000.orc"),
+        OrcFile.writerOptions(conf).setSchema(TypeDescription.fromString(schema))).close()
+    }
+    assert(FastOrcSum.sumFirstLongColumnFiltered(spark, s"$root/long", None) == ((0L, 0L)))
+    assert(FastOrcSum.sumFirstDoubleColumn(spark, s"$root/double") == 0.0)
+  }
+
+  test("FastOrcSum plans Spark's file-scan tasks: ranges tile the files, sums and sarg skips hold") {
+    import graft.sources.FastOrcSum
+    import org.apache.hadoop.fs.Path
+    val dest = s"${sys.props("java.io.tmpdir")}/graft_orc_tiling_spec"
+    // three sorted files of 20 small stripes each; the hex pad column
+    // gives the stripes bytes for the ranges to cut through
+    spark.range(0, 60000, 1, 3)
+      .select(col("id").as("k"), sha2(col("id").cast("string"), 256).as("pad"))
+      .write.mode("overwrite").option("compression", "snappy")
+      .option("orc.stripe.row.count", "1000").option("orc.row.index.stride", "1000")
+      .orc(dest)
+    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    keys.zip(Seq("200000", "1024")).foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val tasks = FastOrcSum.scanTasks(spark, dest)
+      val files = spark.read.orc(dest).inputFiles.map(f => new Path(f).toString).toSet
+      assert(tasks.size == spark.read.orc(dest).rdd.getNumPartitions)
+      // every file is cut into several contiguous ranges from byte 0 to its end
+      val conf = spark.sessionState.newHadoopConf()
+      val byFile = tasks.flatten.groupBy(_.file)
+      assert(byFile.keySet == files)
+      for ((f, rs) <- byFile) {
+        val sorted = rs.sortBy(_.offset)
+        assert(sorted.size > 1, s"$f was not cut")
+        assert(sorted.head.offset == 0L)
+        sorted.zip(sorted.tail).foreach { case (a, b) => assert(a.offset + a.length == b.offset) }
+        val p = new Path(f)
+        assert(sorted.last.offset + sorted.last.length == p.getFileSystem(conf).getFileStatus(p).getLen)
+      }
+      val df = spark.read.orc(dest)
+      val (total, all) = df.agg(count(lit(1)), sum("k")).as[(Long, Long)].head
+      assert(FastOrcSum.stripeSplits(spark, dest).size == 3 * 20)
+      assert(FastOrcSum.sumFirstLongColumnFiltered(spark, dest, None) == ((all, total)))
+      assert(FastOrcSum.sumFirstLongColumn(spark, dest) == all)
+      val (lo, hi) = (25000L, 25500L)
+      val want = df.filter(col("k").between(lo, hi)).agg(sum("k")).head.getLong(0)
+      val (got, scanned) = FastOrcSum.sumFirstLongColumnFiltered(spark, dest, Some((lo, hi)))
+      assert(got == want, s"$got vs $want")
+      assert(scanned < total / 10, s"scanned $scanned of $total rows — no skipping")
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("ORC scan prunes columns and pushes filters (Tier B sargs)") {
     val df = OrcRoundTrip.orcCopy(spark, sf, "lineitem")
       .filter(col("l_orderkey") > 1000)
