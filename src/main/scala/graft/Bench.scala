@@ -41,6 +41,10 @@ import org.apache.spark.sql.SparkSession
   * driver's 2,000-char stdout tail always captures a complete JSON
   * object (the full record is ~8 KB and truncates). Also written to
   * BENCH_SUMMARY.json.
+  *
+  * Both lines carry `host_loaded`, decided from this run alone (see
+  * [[hostLoaded]]): run-average steal, the count of >3× vs-prev
+  * regressions, and the foreign CPU share of the sequence pass.
   */
 object Bench {
 
@@ -141,11 +145,7 @@ object Bench {
             val qs = if (sfOk) queryTimesFromText(text) else Map.empty[String, Double]
             (i, qs)
           }.collectFirst {
-            // shape filter as in historyLines (round-14 review
-            // finding): a probe's vs_prev baselined on a full-run
-            // line reads 1.24-1.68x on a quiet host (cold-JVM share
-            // vs mid-sequence warmth) and spuriously witness-flags
-            // half the probe
+            // run-shape filter: see HistoryShapeRatio
             case (i, qs) if qs.keySet.intersect(currentNames).size >= minCover &&
                 qs.size <= HistoryShapeRatio * math.max(1, currentNames.size) =>
               (s"BENCH_HISTORY.jsonl#$i", qs)
@@ -282,30 +282,19 @@ object Bench {
       prefix: Seq[(String, Double)],
       r1: Map[String, Double],
       sfDir: String,
-      cpuControl: Double,
+      foreignShare: Option[Double],
       stealAvg: Double): String = {
     def r3(x: Double): Double = math.round(x * 1000.0) / 1000.0
     val ok = prefix.collect { case (_, v) if v >= 0 => v }
     s"""{"metric":"bench_summary","phase":"r1_prefix","total_prefix":${r3(ok.sum)},""" +
       s""""n":${prefix.size},"failed":${prefix.size - ok.size},"sf":"$sfDir"""" +
       s"""${vsR1Fragment(prefix, r1)},""" +
-      s""""steal_avg":${r3(stealAvg)},"cpu_control":${r3(cpuControl)}}"""
+      s""""steal_avg":${r3(stealAvg)}${foreignTag(foreignShare)}}"""
   }
 
-  /** Post-record quiet-host adjudication probe selection (r13 VERDICT
-    * item 5): when a round's full runs self-flag as loaded and a quiet
-    * probe supplies the canonical grade, the probe must cover the
-    * r1-shared grading set PLUS every ≥3×-vs-prev flagged query —
-    * INCLUDING streaming entries. The r13 probe excluded streaming by
-    * construction, and the round's only unadjudicated residual
-    * (q196_stream_ann_ingest) was exactly a streaming flag.
-    */
-  def quietProbeNames(
-      r1Shared: Set[String],
-      flaggedVsPrev: Map[String, Double]): Seq[String] =
-    (r1Shared ++ flaggedVsPrev.collect {
-      case (k, v) if v >= LoadedBigRegressionRatio => k
-    }).toSeq.sorted
+  /** `,"foreign_share":N` when the share was measured, else nothing. */
+  def foreignTag(foreignShare: Option[Double]): String =
+    foreignShare.fold("")(f => s""","foreign_share":${math.round(f * 1000.0) / 1000.0}""")
 
   /** Witness selection (r12 VERDICT item 1). The r12 committed record
     * showed the failure mode of a naive `(regressed ++ slowest ++
@@ -405,32 +394,21 @@ object Bench {
   def trustedReading(seq: Double, iso: Double, fresh: Option[Double]): Double =
     fresh.filter(_ > 0).getOrElse((Seq(seq, iso).filter(_ > 0) :+ seq).min)
 
-  /** Witness verdict (pure, spec-pinned — r12 VERDICT item 2 + r13
-    * ADVICE medium). Two distinct comparison classes, normalized
-    * differently:
-    *   - CROSS-RUN baselines (r1, prev round): the trusted reading is
-    *     divided by `hostRatio` (the CPU-control-vs-history ratio,
-    *     floored at 1) — a fresh JVM started on a degraded host is
-    *     still degraded, and r12's q17/q18 read `confirmed` off fresh
-    *     readings taken during a +32% host-skew window.
-    *   - INTRA-RUN disagreement (the no-r1-baseline seq-vs-trusted
-    *     test): RAW readings on both sides. Both were taken on the
-    *     same skewed host, so dividing one side by hostRatio lowered
-    *     the effective seq-noise bar from 1.5 to 1.5/hostRatio and
-    *     mislabeled consistent costs as `seq_noise` (the committed r13
-    *     BENCH_SUMMARY showed q339/q221 seq_noise on a host_loaded run
-    *     — the r13 ADVICE medium finding).
+  /** Witness verdict (pure, spec-pinned), on raw readings throughout:
+    * against the r1 baseline (`ok`/`cleared`/`confirmed`), between the
+    * sequence and the trusted reading when there is no r1 baseline
+    * (`seq_noise`/`cost_confirmed`/`stable`), and against the prior
+    * run (`prev_noise`/`prev_confirmed`). A run on a loaded host says
+    * so through `host_loaded`; its verdicts are not rescaled.
     */
   def witnessVerdict(
       seq: Double, iso: Double, fresh: Option[Double],
-      r1Base: Option[Double], prevSec: Option[Double],
-      hostRatio: Double): String = {
+      r1Base: Option[Double], prevSec: Option[Double]): String = {
     val raw = trustedReading(seq, iso, fresh)
-    val norm = raw / math.max(1.0, hostRatio)
     val v0 = r1Base.filter(_ > 0) match {
       case Some(b) =>
         if (seq / b <= WitnessVsR1Ratio) "ok"
-        else if (norm / b <= WitnessVsR1Ratio) "cleared"
+        else if (raw / b <= WitnessVsR1Ratio) "cleared"
         else "confirmed"
       case None =>
         if (raw > 0 && seq / raw > FreshDisagreeRatio) "seq_noise"
@@ -440,102 +418,71 @@ object Bench {
     prevSec.filter(_ > 0) match {
       case Some(p) if seq / p > WitnessRegressionRatio &&
           (v0 == "ok" || v0 == "stable") =>
-        if (norm / p <= WitnessRegressionRatio) "prev_noise"
+        if (raw / p <= WitnessRegressionRatio) "prev_noise"
         else "prev_confirmed"
       case _ => v0
     }
   }
 
-  /** One witness entry of the full record (pure, spec-pinned — r13
-    * VERDICT item 6): alongside the seq/iso/fresh readings, a
-    * vs-prev-flagged witness carries BOTH adjudication-basis ratios —
-    * `vs_prev_trusted` (trusted reading / prior-round seconds, raw)
-    * and `vs_prev_cpu` (the same divided by the CPU-control host
-    * ratio, the number the verdict's cross-run comparisons actually
-    * use) — so a normalized verdict like `prev_noise` is auditable
-    * from the record without re-deriving the normalizer.
+  /** One witness entry of the full record (pure, spec-pinned): the
+    * seq/iso/fresh readings and, for a witness with a prior-run
+    * baseline, `vs_prev_trusted` (trusted reading / prior-run seconds),
+    * the ratio a `prev_*` verdict was decided on.
     */
   def witnessEntryJson(
       name: String, seq: Double, iso: Double, isoSteal: Double, cc: Double,
-      fresh: Option[Double], prevSec: Option[Double], hostRatio: Double): String = {
+      fresh: Option[Double], prevSec: Option[Double]): String = {
     def r3(x: Double): Double = math.round(x * 1000.0) / 1000.0
     val freshTag = fresh.map(f => s""","fresh":$f""").getOrElse("")
     val prevTag = prevSec.filter(_ > 0).map { p =>
-      val raw = trustedReading(seq, iso, fresh)
-      s""","vs_prev_trusted":${r3(raw / p)}""" +
-        s""","vs_prev_cpu":${r3(raw / math.max(1.0, hostRatio) / p)}"""
+      s""","vs_prev_trusted":${r3(trustedReading(seq, iso, fresh) / p)}"""
     }.getOrElse("")
     s""""$name":{"seq":$seq,"iso":$iso,""" +
       s""""iso_steal":${r3(isoSteal)},""" +
       s""""code_cache":${math.round(cc * 100.0) / 100.0}$freshTag$prevTag}"""
   }
 
-  /** Loaded-host record detector (r11 VERDICT item 7, widened per r12
-    * VERDICT item 2): a full-run record taken under host contention
-    * must flag itself rather than be committed silently as this
-    * round's canonical number. Any signal suffices —
-    *   1. run-average CPU steal above 3% (the r5 hypervisor witness);
-    *   2. ≥3 queries at >3× their prior-round time (r12 dropped the
-    *      threshold from 4: the committed r12 record sat at exactly
-    *      big_regressions = 3 and slipped through);
-    *   3. the run total on SHARED queries >1.2× the median of recent
-    *      same-sf full runs in BENCH_HISTORY — the steal-invisible
-    *      class (CPU-frequency / co-tenant skew) that inflated the
-    *      committed r12 record +32% while steal read 0.008;
-    *   4. the pinned single-thread CPU-control microbenchmark >1.2×
-    *      its history median — the same class, caught even when the
-    *      query mix changed too much for signal 3.
+  /** Loaded-host record detector: a run taken under host contention
+    * must flag itself rather than be committed silently as a canonical
+    * number. It is judged from this run alone; any signal suffices —
+    *   1. run-average CPU steal at or over [[LoadedStealAvg]] (the
+    *      hypervisor witness);
+    *   2. at least [[LoadedBigRegressionCount]] queries at more than
+    *      [[LoadedBigRegressionRatio]]× their prior-run time;
+    *   3. the foreign CPU share of the sequence pass (see
+    *      [[foreignCpuShare]]) at or over [[LoadedForeignShare]]: other
+    *      processes on this host took CPU time the queries could have
+    *      used, the co-tenant class steal does not show.
     * Pure for spec-pinning.
     */
   val LoadedStealAvg = 0.03
   val LoadedBigRegressionRatio = 3.0
   val LoadedBigRegressionCount = 3
-  val LoadedTotalVsHistory = 1.2
+  val LoadedForeignShare = 0.1
   def hostLoaded(stealAvg: Double, bigRegressions: Int,
-      totalVsHistory: Option[Double] = None,
-      cpuVsHistory: Option[Double] = None): Boolean =
+      foreignShare: Option[Double] = None): Boolean =
     stealAvg >= LoadedStealAvg ||
       bigRegressions >= LoadedBigRegressionCount ||
-      totalVsHistory.exists(_ > LoadedTotalVsHistory) ||
-      cpuVsHistory.exists(_ > LoadedTotalVsHistory)
+      foreignShare.exists(_ >= LoadedForeignShare)
 
-  /** This run's shared-query total vs the median of the newest (up to
-    * 5) qualifying same-sf full runs in BENCH_HISTORY.jsonl — the
-    * total-vs-history loaded-host signal. Per prior line: ratio =
-    * Σ this-run seconds / Σ that-line seconds over the intersection of
-    * positive readings (inventory growth between rounds makes raw
-    * totals incomparable). Lines must cover ≥ half the current
-    * inventory (partials/fresh-child lines never do). None when no
-    * line qualifies.
+  /** The share of the host's CPU time that other processes used over
+    * an interval: (host busy − this process's utime+stime) / host
+    * total, all in jiffies over the same interval. Both counters tick
+    * in whole jiffies, so this process's time can exceed the host's
+    * busy time by a rounding step; that reads 0, not negative. None
+    * when no time passed.
     */
-  def totalVsHistoryRatio(
-      results: Seq[(String, Double)],
-      sfDir: String,
-      dir: java.io.File = new java.io.File(".")): Option[Double] = {
-    val cur = results.collect { case (k, v) if v > 0 => k -> v }.toMap
-    val ratios = historyLines(sfDir, cur.keySet, dir).flatMap { text =>
-      val qs = queryTimesFromText(text)
-      val shared = qs.keySet.intersect(cur.keySet)
-        .filter(k => qs(k) > 0)
-      if (shared.size < math.max(1, cur.size / 2)) None
-      else {
-        val prevSum = shared.toSeq.map(qs).sum
-        if (prevSum <= 0) None
-        else Some(shared.toSeq.map(cur).sum / prevSum)
-      }
-    }
-    if (ratios.isEmpty) None else Some(median(ratios))
-  }
+  def foreignCpuShare(busy: Long, self: Long, total: Long): Option[Double] =
+    if (total <= 0) None
+    else Some(math.max(0L, busy - self).toDouble / total)
 
-  /** Whether a BENCH_HISTORY line was recorded under host contention
-    * (r13 ADVICE low): loaded runs used to be appended unconditionally
-    * and still counted in the history medians, so the total-vs-history
-    * and cpu-control baselines ratcheted UPWARD after each loaded run —
-    * successive contaminated rounds masking exactly the contention
-    * class signals 3–4 exist to catch. Two markers: the explicit
-    * `"host_loaded":true` tag (written from r14 on), and — for lines
-    * appended before the tag existed (r13's two loaded full runs) —
-    * a recorded run-average steal at or over [[LoadedStealAvg]].
+  /** Whether a BENCH_HISTORY line was recorded under host contention,
+    * so [[previousQueryTimes]] never takes a loaded run as the vs_prev
+    * baseline (a steal-inflated baseline makes this run's ratios read
+    * fast and under-arms the regression witness). Two markers: the
+    * explicit `"host_loaded":true` tag, and — for lines appended
+    * before the tag existed — a recorded run-average steal at or over
+    * [[LoadedStealAvg]].
     */
   def lineLoaded(text: String): Boolean =
     if (text.contains("\"host_loaded\":")) text.contains("\"host_loaded\":true")
@@ -548,113 +495,17 @@ object Bench {
         .findFirstMatchIn(text)
         .exists(_.group(1).toDouble >= LoadedStealAvg)
 
-  /** Raw text of qualifying BENCH_HISTORY lines (same sf, ≥half
-    * inventory coverage, NOT flagged loaded — see [[lineLoaded]] —
-    * and of a SIMILAR RUN SHAPE: the line's own query count is at
-    * most [[HistoryShapeRatio]]× the current run's), NEWEST first,
-    * capped at 5 — shared by the total-vs-history and
-    * cpu-control-vs-history loaded signals.
-    *
-    * The shape filter (round 14): per-query times are systematically
-    * context-dependent — a query inside a 341-entry full sequence
-    * runs on a JVM warmed by hundreds of prior queries, while the
-    * same query in a 52-entry adjudication probe pays its share of a
-    * cold JVM. Measured: a quiet probe (steal 0.014, cpu_vs_hist
-    * 0.82, zero big regressions, vs_r1 0.83) read total_vs_hist
-    * 1.24–1.68 against FULL-run baselines and 0.975 against the
-    * like-shaped r13 probe line — the unlike-shape comparison
-    * false-flags every quiet probe as loaded. Full-vs-full and
-    * probe-vs-probe comparisons both survive the filter; the
-    * coverage floor already prevents the reverse mismatch (a full
-    * run never baselines against a probe line).
+  /** Run-shape filter of the vs_prev baseline: a history line
+    * qualifies only if its own query count is at most this multiple
+    * of the current run's. Per-query times depend on the run's shape —
+    * a query inside a 341-entry full sequence runs on a JVM warmed by
+    * hundreds of prior queries, while the same query in a 52-entry
+    * probe pays its share of a cold JVM (a quiet probe read 1.24–1.68×
+    * against full-run lines and 0.975× against a like-shaped probe).
+    * The coverage floor in [[previousQueryTimes]] already prevents the
+    * reverse mismatch (a full run never baselines against a probe).
     */
   val HistoryShapeRatio = 2
-  def historyLines(sfDir: String, currentNames: Set[String],
-      dir: java.io.File): Seq[String] = {
-    val hist = new java.io.File(dir, "BENCH_HISTORY.jsonl")
-    if (!hist.exists()) return Seq.empty
-    try {
-      import scala.jdk.CollectionConverters._
-      val lines = java.nio.file.Files.readAllLines(hist.toPath).asScala.toSeq
-      val sfRe = "\"sf\":\\s*\"([^\"]+)\"".r
-      val wantSf = new java.io.File(sfDir).getName
-      val minCover = math.max(1, currentNames.size / 2)
-      lines.reverse.iterator.filter { text =>
-        !lineLoaded(text) && {
-          sfRe.findFirstMatchIn(text).map(_.group(1))
-            .exists(s => new java.io.File(s).getName == wantSf) && {
-            val qs = queryTimesFromText(text)
-            qs.keySet.intersect(currentNames).size >= minCover &&
-              qs.size <= HistoryShapeRatio * math.max(1, currentNames.size)
-          }
-        }
-      }.take(5).toSeq
-    } catch { case scala.util.control.NonFatal(_) => Seq.empty }
-  }
-
-  /** Pinned single-thread CPU-control microbenchmark: a fixed
-    * splitmix64 fold (data-independent, cache-resident, allocation-
-    * free) timed after one JIT warmup. Host CPU skew — frequency
-    * scaling, co-tenant contention — inflates this the same way it
-    * inflates the sub-second codegen-bound queries that produced r12's
-    * false `confirmed` verdicts, while genuine plan regressions leave
-    * it untouched. Recorded in every full-run line; the ratio vs the
-    * history median both feeds [[hostLoaded]] and normalizes witness
-    * verdicts (a fresh JVM on a degraded host is still degraded — the
-    * r12 q17/q18 lesson).
-    */
-  def cpuControlSeconds(): Double = {
-    def pass(): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9e3779b97f4a7c15L
-      var acc = 0L
-      var i = 0
-      while (i < (1 << 26)) {
-        x += 0x9e3779b97f4a7c15L
-        var z = x
-        z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-        z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-        acc ^= z ^ (z >>> 31)
-        i += 1
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (acc == 42L) System.err.println("") // keep acc live
-      dt
-    }
-    pass() // JIT warmup
-    math.min(pass(), pass())
-  }
-
-  /** Median `"cpu_control":N` across recent same-sf, non-loaded
-    * history lines. Deliberately NOT routed through [[historyLines]]
-    * (round-14 review finding): the CPU control is a pinned
-    * single-thread microbench, independent of run shape and query
-    * coverage — gating it on the total-vs-history filters would
-    * discard valid baselines whenever the run shape changes (e.g. the
-    * first probe at a new size) and silently disarm both the
-    * cpu-vs-history loaded signal and the verdict normalizer, the
-    * exact r12 false-confirmation class. `currentNames` is kept for
-    * signature stability but unused.
-    */
-  def cpuControlHistoryMedian(sfDir: String, currentNames: Set[String],
-      dir: java.io.File = new java.io.File(".")): Option[Double] = {
-    val hist = new java.io.File(dir, "BENCH_HISTORY.jsonl")
-    if (!hist.exists()) return None
-    try {
-      import scala.jdk.CollectionConverters._
-      val lines = java.nio.file.Files.readAllLines(hist.toPath).asScala.toSeq
-      val sfRe = "\"sf\":\\s*\"([^\"]+)\"".r
-      val re = "\"cpu_control\":(-?\\d+(?:\\.\\d+)?(?:[eE][+-]?\\d+)?)".r
-      val wantSf = new java.io.File(sfDir).getName
-      val vs = lines.reverse.iterator.filter { text =>
-        !lineLoaded(text) &&
-          sfRe.findFirstMatchIn(text).map(_.group(1))
-            .exists(s => new java.io.File(s).getName == wantSf)
-      }.flatMap(t => re.findFirstMatchIn(t).map(_.group(1).toDouble))
-        .filter(_ > 0).take(5).toSeq
-      if (vs.isEmpty) None else Some(median(vs))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
 
   /** Measure one query in a brand-new JVM: re-exec this class with the
     * parent's own JVM flags and classpath, `SPARK_GRAFT_FRESH=1` +
@@ -719,6 +570,33 @@ object Bench {
       Some((f(0) + f(1) + f(2), steal, f.sum))
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** This process's cumulative utime+stime over all its threads, in
+    * jiffies from /proc/self/stat — the clock [[readCpu]] reads the
+    * host on. Linux-only; absent silently elsewhere.
+    */
+  def readSelfCpu(): Option[Long] =
+    try {
+      val stat = new String(
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("/proc/self/stat")), "UTF-8")
+      // the fields after the parenthesized command name start at field
+      // 3 (state); utime and stime are fields 14 and 15
+      val f = stat.substring(stat.lastIndexOf(')') + 1).trim.split("\\s+")
+      Some(f(11).toLong + f(12).toLong)
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Jiffies at one point, or over an interval: the host's busy, steal
+    * and total time, and this process's own busy time.
+    */
+  final case class CpuTicks(busy: Long, steal: Long, total: Long, self: Long) {
+    def stealShare: Double = steal.toDouble / total
+    def minus(o: CpuTicks): CpuTicks =
+      CpuTicks(busy - o.busy, steal - o.steal, total - o.total, self - o.self)
+  }
+
+  def readTicks(): Option[CpuTicks] =
+    for ((busy, steal, total) <- readCpu(); self <- readSelfCpu())
+      yield CpuTicks(busy, steal, total, self)
+
   /** JIT code-cache occupancy (used / reserved across the CodeHeap
     * pools) — the in-JVM slowdown witness. A long codegen-heavy
     * sequence can fill the code cache; when it is full the JIT stops
@@ -740,7 +618,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = EngineSession.defaultCpus
     val spark: SparkSession = EngineSession.local("graft-bench", cpus)
 
     def time(fn: => Unit): Double = {
@@ -756,14 +634,22 @@ object Bench {
       r1.keySet)
     val r1PrefixLen = entries.count(e => r1.contains(e.name))
 
-    /** One hygienic measurement of `e`: GC + fresh warmup + timed
-      * medians, then release everything the query pinned. Shared by the
-      * sequence pass and the isolated witness pass so the two numbers
-      * differ ONLY in what ran before them in this JVM.
-      */
-    val stealByQuery = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // host CPU ticks over each query's latest measurement
+    val ticksByQuery = scala.collection.mutable.LinkedHashMap.empty[String, CpuTicks]
+    def stealAvg(ts: Iterable[CpuTicks]): Double =
+      if (ts.isEmpty) 0.0 else ts.map(_.stealShare).sum / ts.size
+    def foreignShare(ts: Iterable[CpuTicks]): Option[Double] =
+      foreignCpuShare(ts.map(_.busy).sum, ts.map(_.self).sum, ts.map(_.total).sum)
 
-    def measure(e: QueryEntry, timedRuns: Int, profile: Boolean): Double = {
+    def runOnce(e: QueryEntry): Unit =
+      e.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+
+    /** One hygienic measurement of `e`: GC + one warmup run + timed
+      * medians, all through the `noop` sink, then release everything
+      * the query pinned. Shared by the sequence, witness and fresh-JVM
+      * passes so their numbers differ ONLY in what ran before them.
+      */
+    def measure(e: QueryEntry, timedRuns: Int): Double = {
       // Deterministic trial hygiene (outside every timed region): a
       // driver GC lets ContextCleaner reclaim the previous queries'
       // broadcast blocks NOW rather than whenever the 30s periodic GC
@@ -780,33 +666,24 @@ object Bench {
       // full bench vs 0.56 s isolated). Release what THIS query pinned
       // once its runs finish; pre-existing memos stay.
       val t = Reuse.isolating(spark) {
-        val cpu0 = readCpu()
+        val ticks0 = readTicks()
         val t = try {
-          // attribute native-path scan time and eagerly-materialized
-          // sub-queries to the query about to run
-          metrics.NativeScanTime.drain()
-          metrics.RuntimeBreakdown.drainPending()
-          // warmup doubles as the reference-style runtime-breakdown
-          // profile (parse_stackcollapse bins)
-          val warm = e.run(spark, sfDir)
-          if (profile) System.err.println(
-            s"[bench] ${e.name} breakdown: ${metrics.RuntimeBreakdown.profile(warm).render}")
+          runOnce(e)
           median(Seq.fill(timedRuns) {
             // streaming: drop the warmup/previous rep's dead provider
             // registry before the timed window (see the sweep comment
             // below + StateStoreHygiene)
             if (isStreaming(e.name))
               org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
-            time(
-              e.run(spark, sfDir).write.format("noop").mode("overwrite").save())
+            time(runOnce(e))
           })
         } catch {
           case ex: Throwable =>
             System.err.println(s"[bench] ${e.name} failed: ${ex.getMessage}")
             -1.0
         }
-        for ((b0, s0, t0) <- cpu0; (b1, s1, t1) <- readCpu() if t1 > t0)
-          stealByQuery(e.name) = (s1 - s0).toDouble / (t1 - t0).toDouble
+        for (a <- ticks0; b <- readTicks() if b.total > a.total)
+          ticksByQuery(e.name) = b.minus(a)
         t
       }
       // streaming runs use a fresh checkpoint each time (re-runs must
@@ -827,18 +704,12 @@ object Bench {
     // clobber the parent's record).
     if (sys.env.contains("SPARK_GRAFT_FRESH")) {
       val rs = entries.map(e =>
-        e.name -> measure(e, timedRuns = timedRunsFor(e.name, 3), profile = false))
+        e.name -> measure(e, timedRuns = timedRunsFor(e.name, 3)))
       println(rs.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("""{"fresh":{""", ",", "}}"))
       spark.stop()
       return
     }
-
-    // pinned CPU-control microbenchmark BEFORE the sequence (r12
-    // VERDICT item 2): its ratio vs the history median is the
-    // steal-invisible loaded-host signal and the verdict normalizer
-    val cpuControl = cpuControlSeconds()
-    System.err.println(f"[bench] cpu_control=$cpuControl%.3f s")
 
     // the sequence, r1-shared prefix first; the early summary (the
     // timeout-survivable grading record, r13 VERDICT item 1) is
@@ -846,27 +717,19 @@ object Bench {
     // completes — BEFORE inventory position r1PrefixLen + 1 runs
     val resultsBuf = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     entries.zipWithIndex.foreach { case (e, i) =>
-      resultsBuf += e.name -> measure(e, timedRunsFor(e.name, 5), profile = true)
+      resultsBuf += e.name -> measure(e, timedRunsFor(e.name, 5))
       if (i + 1 == r1PrefixLen) {
-        val sa = {
-          val vs = stealByQuery.values
-          if (vs.isEmpty) 0.0 else vs.sum / vs.size
-        }
-        val early = r1PrefixSummaryJson(resultsBuf.toSeq, r1, sfDir, cpuControl, sa)
+        val early = r1PrefixSummaryJson(resultsBuf.toSeq, r1, sfDir,
+          foreignShare(ticksByQuery.values), stealAvg(ticksByQuery.values))
         println(early)
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get("BENCH_SUMMARY.json"), early + "\n")
       }
     }
     val results = resultsBuf.toSeq
-    // sequence-time steal, snapshotted before the witness pass reuses
-    // measure() (which would overwrite entries with isolated-run steal)
-    val seqSteal = stealByQuery.toMap
-    // loaded-host signals computed BEFORE this run is appended to
-    // BENCH_HISTORY (it must compare against PRIOR runs, not itself)
-    val totalVsHist = totalVsHistoryRatio(results, sfDir)
-    val cpuVsHist = cpuControlHistoryMedian(sfDir, entries.map(_.name).toSet)
-      .map(m => cpuControl / m)
+    // sequence-pass ticks, snapshotted before the witness pass reuses
+    // measure() (which overwrites entries with isolated-run ticks)
+    val seqTicks = ticksByQuery.toMap
 
     val qs = results
       .map { case (k, v) => "\"" + k + "\":" + v }
@@ -899,11 +762,11 @@ object Bench {
       s"[bench] witness cap squeezed out: ${witnessDropped.mkString(",")}")
     val witness = witnessNames.flatMap { n =>
       entries.find(_.name == n).map { e =>
-        val iso = measure(e, timedRunsFor(n, 3), profile = false)
+        val iso = measure(e, timedRunsFor(n, 3))
         val cc = codeCacheFrac()
         System.err.println(
           f"[bench] witness $n: seq=${byName(n)}%.3f iso=$iso%.3f code_cache=$cc%.2f")
-        (n, iso, stealByQuery.getOrElse(n, 0.0), cc)
+        (n, iso, ticksByQuery.get(n).fold(0.0)(_.stealShare), cc)
       }
     }
     // fresh-JVM tiebreaker: self-contradictory witnesses (seq vs iso
@@ -926,51 +789,35 @@ object Bench {
         System.err.println(f"[bench] fresh-JVM witness $n: fresh=$f%.3f")
         n -> f
       }.toMap
-    // verdict normalizer (r12 VERDICT item 2): a fresh JVM started on
-    // a degraded host is still degraded — the single-thread CPU control
-    // moves with host skew and with nothing plan-shaped, so cross-run
-    // baseline comparisons divide the trusted reading by this ratio
-    // (floored at 1 — a FASTER host must never manufacture
-    // confirmations). Intra-run comparisons stay raw (r13 ADVICE
-    // medium) — see witnessVerdict.
-    val hostRatio = math.max(1.0, cpuVsHist.getOrElse(1.0))
     val witnessJson = witness.map { case (n, iso, isoSteal, cc) =>
       witnessEntryJson(n, byName(n), iso, isoSteal, cc,
-        freshByName.get(n), prev.get(n), hostRatio)
+        freshByName.get(n), prev.get(n))
     }.mkString("{", ",", "}")
 
+    def r3(x: Double): Double = math.round(x * 1000.0) / 1000.0
+    val stealAvgRaw = stealAvg(seqTicks.values)
     // per-query steal fractions above 1% (plus the run-wide fraction):
     // the environmental trust signal — see readCpu()
     val stealJson = {
-      val hot = seqSteal.collect {
-        case (k, v) if v >= 0.01 => s""""$k":${math.round(v * 1000.0) / 1000.0}"""
+      val hot = seqTicks.collect {
+        case (k, t) if t.stealShare >= 0.01 => s""""$k":${r3(t.stealShare)}"""
       }
-      val runWide = seqSteal.values
-      val avg =
-        if (runWide.isEmpty) 0.0
-        else math.round(runWide.sum / runWide.size * 1000.0) / 1000.0
-      s"""{"run_avg":$avg${if (hot.isEmpty) "" else hot.mkString(",", ",", "")}}"""
+      s"""{"run_avg":${r3(stealAvgRaw)}${if (hot.isEmpty) "" else hot.mkString(",", ",", "")}}"""
     }
 
-    // loaded-host self-flag (r11 VERDICT item 7), computed BEFORE the
-    // full-record line so the line itself carries it — historyLines()
-    // skips flagged lines, keeping the history medians (signals 3–4)
-    // from ratcheting upward after each loaded run (r13 ADVICE low)
-    val stealAvgRaw = {
-      val vs = seqSteal.values
-      if (vs.isEmpty) 0.0 else vs.sum / vs.size
-    }
+    // loaded-host self-flag, computed BEFORE the full-record line so the
+    // line itself carries it — previousQueryTimes skips flagged lines
+    val foreign = foreignShare(seqTicks.values)
     val bigRegressions = results.count { case (k, v) =>
       v > 0 && prev.get(k).exists(p => p > 0 && v / p > LoadedBigRegressionRatio)
     }
-    val loaded = hostLoaded(stealAvgRaw, bigRegressions, totalVsHist, cpuVsHist)
+    val loaded = hostLoaded(stealAvgRaw, bigRegressions, foreign)
 
     val line =
       s"""{"metric":"total_median_sec","value":${ok.sum},"unit":"sec","queries":$qs,""" +
         s""""sf":"$sfDir","n_queries":${results.size},"failed":$failed""" +
         s""","vs_prev":$vsPrev$prevTag,"witness":$witnessJson,"steal":$stealJson""" +
-        s""","cpu_control":${math.round(cpuControl * 1000.0) / 1000.0}""" +
-        s""","host_loaded":$loaded}"""
+        s"""${foreignTag(foreign)},"host_loaded":$loaded}"""
     println(line)
     // file artifact in case the wrapper's stdout scrape misses the line
     java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LAST.json"), line + "\n")
@@ -1000,25 +847,17 @@ object Bench {
     // New queries (no r1 baseline) whose witness CONFIRMS the sequence
     // reading get "cost_confirmed", a distinct label from the
     // cleared-as-noise case.
-    def r3(x: Double): Double = math.round(x * 1000.0) / 1000.0
     val vsR1Json = vsR1Fragment(results, r1)
-    // verdicts via the pure, spec-pinned witnessVerdict (r12 VERDICT
-    // item 2 + r13 ADVICE medium): cross-run baselines normalized by
-    // hostRatio, intra-run disagreement on raw readings
     val verdicts = witness.map { case (n, iso, _, _) =>
       val v = witnessVerdict(byName(n), iso,
-        freshByName.get(n).filter(_ > 0), r1.get(n), prev.get(n), hostRatio)
+        freshByName.get(n).filter(_ > 0), r1.get(n), prev.get(n))
       s""""$n":"$v""""
     }.mkString("{", ",", "}")
-    val stealAvg = r3(stealAvgRaw)
     if (loaded) System.err.println(
-      s"[bench] HOST LOADED record: steal_avg=$stealAvg " +
+      s"[bench] HOST LOADED record: steal_avg=${r3(stealAvgRaw)} " +
         s"big_regressions=$bigRegressions " +
-        s"total_vs_hist=${totalVsHist.fold("n/a")(r => r3(r).toString)} " +
-        s"cpu_vs_hist=${cpuVsHist.fold("n/a")(r => r3(r).toString)} " +
+        s"foreign_share=${foreign.fold("n/a")(r => r3(r).toString)} " +
         "— re-run on a quiet host for the canonical number")
-    val tvhTag = totalVsHist.fold("")(r => s""","total_vs_hist":${r3(r)}""")
-    val cvhTag = cpuVsHist.fold("")(r => s""","cpu_vs_hist":${r3(r)}""")
     // names the witness cap squeezed out (r13 ADVICE low): visible in
     // the round record, so a dropped over-threshold flag is auditable
     val droppedTag =
@@ -1028,9 +867,9 @@ object Bench {
     val summary =
       s"""{"metric":"bench_summary","total":${r3(ok.sum)},"n":${results.size},""" +
         s""""failed":$failed,"sf":"$sfDir"$vsR1Json,""" +
-        s""""witness_verdicts":$verdicts$droppedTag,"steal_avg":$stealAvg,""" +
+        s""""witness_verdicts":$verdicts$droppedTag,"steal_avg":${r3(stealAvgRaw)},""" +
         s""""host_loaded":$loaded,"big_regressions":$bigRegressions""" +
-        s"""$tvhTag$cvhTag,"full":"BENCH_LAST.json"}"""
+        s"""${foreignTag(foreign)},"full":"BENCH_LAST.json"}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_SUMMARY.json"), summary + "\n")
     println(summary)

@@ -99,7 +99,21 @@ object EngineSession {
       case scala.util.control.NonFatal(_) => ()
     }
 
-  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The local-mode core count every main builds its session with:
+    * `SPARK_GRAFT_CPUS`, else this host's processor count.
+    */
+  def defaultCpus: String = cpusSetting(sys.env.get("SPARK_GRAFT_CPUS")).toString
+
+  /** Parse `SPARK_GRAFT_CPUS`: an integer ≥ 1, or this host's processor
+    * count when unset. A bad value fails here, at startup, not inside
+    * Spark's master-URL parser or a later partition count.
+    */
+  def cpusSetting(raw: Option[String]): Int = {
+    val n = raw.fold(Option(Runtime.getRuntime.availableProcessors))(_.trim.toIntOption)
+    require(n.exists(_ >= 1),
+      s"SPARK_GRAFT_CPUS must be an integer >= 1, got '${raw.getOrElse("")}'")
+    n.get
+  }
 
   /** Apply runtime confs + register graft SQL functions on an existing
     * session (e.g. one built by the driver harness). Idempotent and

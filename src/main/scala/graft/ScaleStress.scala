@@ -349,8 +349,7 @@ object ScaleStress {
   def main(args: Array[String]): Unit = {
     val n = scaleSetting(sys.env.get("SPARK_GRAFT_SCALE"))
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineSession.local("graft-scale-stress", cpus)
+    val spark = EngineSession.local("graft-scale-stress")
     val big = stageBlowup(spark, srcDir, n)
     System.err.println(s"[scale] staged ${n}x blowup at $big")
 

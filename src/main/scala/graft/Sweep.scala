@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions._
 object Sweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = EngineSession.local("graft-sweep", cpus)
+    val spark = EngineSession.local("graft-sweep")
 
     val src = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val rows = src.count()

@@ -5,22 +5,16 @@ import java.util.concurrent.atomic.AtomicLong
 /** Aggregated task-side scan nanos from the FastOrcSum native path.
   *
   * FastOrcSum runs as an RDD job before its scalar ever becomes a
-  * DataFrame, so its work is invisible to the SQL-metric walk in
-  * [[RuntimeBreakdown]] — which left the q40 breakdown reading 0%.
-  * The native tasks report their measured scan time here;
-  * [[RuntimeBreakdown.of]] folds the current value into the scan bin,
-  * and the bench harness drains the register before each query's
-  * profiled warmup run so time is attributed to the query that spent
-  * it.
+  * DataFrame, so no SQL metric sees its scan. The native tasks report
+  * their measured scan time here. Its only reader is perfbench's traced
+  * run, which drains the register around each native op and reports
+  * the time as `scan.native_task_s`.
   */
 object NativeScanTime {
   private val nanos = new AtomicLong(0L)
 
   def addNanos(n: Long): Unit = nanos.addAndGet(n)
 
-  /** Current accumulated nanos (non-destructive — see [[drain]]). */
-  def peekNanos: Long = nanos.get()
-
-  /** Read and reset — called by the bench loop between queries. */
+  /** Read and reset. */
   def drain(): Long = nanos.getAndSet(0L)
 }

@@ -292,8 +292,7 @@ object Dedup {
     // semantically-equal plan from cache on every later run, turning
     // repeated bench runs into cache hits; localCheckpoint makes a
     // fresh RDD per call, so each run pays the honest pipeline cost.
-    val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    val out = pre.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     sigs.unpersist()
     out
   }
@@ -396,8 +395,7 @@ object Dedup {
     val pre = probeIndexRuns(spark, newSigs, Seq(idx), num, den)
       .orderBy("new_doc", "hist_doc")
     // localCheckpoint materialization, MEMORY_ONLY — see nearDupPairs
-    val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    val out = pre.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     newSigs.unpersist()
     out
   }
@@ -469,8 +467,7 @@ object Dedup {
           col("inter"), col("uni"))
       // materialize THIS increment's pairs before the fold-in below
       // mutates the delta the next run of this query will overwrite
-      val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre)
-        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      val out = pre.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
       // the FOLD-IN: one delta run per increment, deterministic and
       // idempotent (overwrite), re-paid per call so bench cost stays
       // honest
@@ -527,8 +524,7 @@ object Dedup {
     val b2 = batchSignatures(docs, batchNo(col("doc_id")) === 2, par)
     val pre = probeIndexRuns(spark, b2, Seq(compacted), num, den)
       .orderBy("new_doc", "hist_doc")
-    val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    val out = pre.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     b2.unpersist()
     out
   }
@@ -584,8 +580,7 @@ object Dedup {
     val newSigs = batchSignatures(docs, col("doc_id") % 5 === 0, par)
     val pre = probeIndexRuns(spark, newSigs, Seq(s"$tdir/purged"), num, den)
       .orderBy("new_doc", "hist_doc")
-    val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    val out = pre.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     newSigs.unpersist()
     out
   }
@@ -741,8 +736,7 @@ object Dedup {
       .orderBy("doc_id")
     // MEMORY_ONLY: clustered-docs-only frame (see nearDupPairs — same
     // keep-disk-out-of-the-timed-region rationale)
-    val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    val out = pre.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     cached.unpersist()
     edges.unpersist()
     out
@@ -1693,8 +1687,7 @@ object Dedup {
       .orderBy("eval_id", "train_id")
     // MEMORY_ONLY: verified cross-corpus pair set, LSH-filtered small
     // (see nearDupPairs — same disk-free-timed-region rationale)
-    val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    val out = pre.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     sigC.unpersist()
     sigP.unpersist()
     out

@@ -108,7 +108,7 @@ object PageRank {
       iters: Int, nodeCount: Long,
       edgeLocalLimit: Long = LiteralCarryLimit): DataFrame = {
     val spark = edges.sparkSession
-    val e = graft.metrics.RuntimeBreakdown.noteExecuted(edges).localCheckpoint(true)
+    val e = edges.localCheckpoint(true)
     val base = (1.0 - damping) / nodeCount
     val nodeType = nodes.schema("node").dataType
     // model-sized: ≤n_nodes rows — the rank-vector key set (call sites
@@ -164,7 +164,7 @@ object PageRank {
   private[graft] def distributedLoop(edges: DataFrame, nodes: DataFrame,
       damping: Double, iters: Int, nodeCount: Long,
       forceShuffle: Boolean = false): DataFrame = {
-    val e = graft.metrics.RuntimeBreakdown.noteExecuted(edges).localCheckpoint(true)
+    val e = edges.localCheckpoint(true)
     val base = (1.0 - damping) / nodeCount
     val small = !forceShuffle && nodeCount <= BroadcastNodeLimit
     // forceShuffle (q300's certification mode, the q180 forced-CC
@@ -256,9 +256,8 @@ object PageRank {
     */
   def kHop(edges: DataFrame, source: Long, iters: Int,
       edgeLocalLimit: Long = LiteralCarryLimit): DataFrame = {
-    val e = graft.metrics.RuntimeBreakdown.noteExecuted(
-      edges.select(col("src").cast(LongType).as("src"),
-        col("dst").cast(LongType).as("dst"))).localCheckpoint(true)
+    val e = edges.select(col("src").cast(LongType).as("src"),
+      col("dst").cast(LongType).as("dst")).localCheckpoint(true)
     // Model-sized graph (≤ edgeLocalLimit edges): BFS is driver math
     // over the collected adjacency — burning one Spark job per hop on
     // a ≤2²⁰-row frame buys nothing (the q93 literal-carry argument;

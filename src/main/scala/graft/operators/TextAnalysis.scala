@@ -254,7 +254,7 @@ object TextAnalysis {
       .withColumn("pack_id", expr(s"(cum - n_tok) div $budget"))
       .select("doc_id", "n_tok", "pack_id")
     if (!materialize) return pre // plan-inspection path (spec); keyed stays cached
-    val out = graft.metrics.RuntimeBreakdown.noteExecuted(pre).localCheckpoint(true)
+    val out = pre.localCheckpoint(true)
     keyed.unpersist()
     out
   }

@@ -23,7 +23,7 @@ object JobProfile {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = graft.EngineSession.local("jobprofile", "32")
+    val spark = graft.EngineSession.local("jobprofile")
 
     val jobStart = mutable.LinkedHashMap.empty[Int, Long]
     val jobEnd = mutable.LinkedHashMap.empty[Int, Long]

@@ -9,8 +9,7 @@ object StageBlowup {
   def main(args: Array[String]): Unit = {
     val srcDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val n = if (args.length > 1) args(1).toInt else 10
-    val spark = graft.EngineSession.local(
-      "stage-blowup", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.EngineSession.local("stage-blowup")
     val big = graft.ScaleStress.stageBlowup(spark, srcDir, n)
     println(s"STAGED $big")
     spark.stop()

@@ -181,17 +181,27 @@ class EdgeCaseSpec extends SparkSpec {
     // r12's committed record: big_regressions = 3 slipped under the
     // old threshold of 4 — 3 now flags
     assert(hostLoaded(stealAvg = 0.008, bigRegressions = 3))
-    // the steal-invisible class: +32% total vs the same-code history
-    // median with steal 0.008 and only 2 big regressions — signal 3
-    assert(hostLoaded(stealAvg = 0.008, bigRegressions = 2,
-      totalVsHistory = Some(1.32)))
-    // the pinned CPU control alone also flags — signal 4
-    assert(hostLoaded(stealAvg = 0.001, bigRegressions = 0,
-      totalVsHistory = None, cpuVsHistory = Some(1.3)))
-    // a quiet run with isolated noise does not
-    assert(!hostLoaded(stealAvg = 0.001, bigRegressions = 2,
-      totalVsHistory = Some(1.05), cpuVsHistory = Some(0.98)))
+    // other processes took half the host's CPU time during the
+    // sequence: flags with no steal and no regression
+    assert(hostLoaded(stealAvg = 0.001, bigRegressions = 0, foreignShare = Some(0.5)))
+    // a quiet run: an idle host's foreign share reads about 0.004
+    assert(!hostLoaded(stealAvg = 0.004, bigRegressions = 2, foreignShare = Some(0.004)))
     assert(!hostLoaded(stealAvg = 0.01, bigRegressions = 0))
+    // an unmeasured share is no signal
+    assert(!hostLoaded(stealAvg = 0.001, bigRegressions = 0, foreignShare = None))
+  }
+
+  test("foreign CPU share: other processes' busy jiffies over the host total") {
+    import graft.Bench.foreignCpuShare
+    // all the host's busy time was this process's own
+    assert(foreignCpuShare(busy = 300, self = 300, total = 400) == Some(0.0))
+    // jiffy rounding can put this process a tick over the host's busy
+    // time: clamped at 0, never negative
+    assert(foreignCpuShare(busy = 300, self = 302, total = 400) == Some(0.0))
+    // half the busy time was foreign, on a fully busy host
+    assert(foreignCpuShare(busy = 400, self = 200, total = 400) == Some(0.5))
+    // no time passed: no signal rather than a division by zero
+    assert(foreignCpuShare(busy = 0, self = 0, total = 0).isEmpty)
   }
 
   test("witness selection: big regressions and slowest-8 are uncappable (r12 item 1)") {
@@ -243,10 +253,11 @@ class EdgeCaseSpec extends SparkSpec {
     // and the early summary line is complete, small, and tagged partial
     val early = graft.Bench.r1PrefixSummaryJson(
       ordered.take(prefixLen).map(e => e.name -> r1(e.name)),
-      r1, "/root/testdata/sf0.1", cpuControl = 0.07, stealAvg = 0.001)
+      r1, "/root/testdata/sf0.1", foreignShare = Some(0.004), stealAvg = 0.001)
     assert(early.length < 1500, s"early summary too big for the driver tail: ${early.length}")
     assert(early.contains(""""phase":"r1_prefix""""))
     assert(early.contains(""""vs_r1":1.0"""), early) // prefix measured AT the baseline
+    assert(early.contains(""""foreign_share":0.004"""), early)
   }
 
   test("streaming entries get a single timed run (r13 item 1: the ~70s floor)") {
@@ -263,46 +274,34 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("witness verdicts: intra-run disagreement is unnormalized (r13 ADVICE medium)") {
     import graft.Bench.witnessVerdict
-    // the r13 defect: on a host with cpu_vs_hist = 1.33, a new query
-    // (no r1 baseline) whose fresh reading CONFIRMS the sequence cost
-    // (6.0 vs 4.5 — ratio 1.33 < 1.5) was labeled seq_noise because
-    // trusted was divided by hostRatio before the disagreement test
-    // (6.0 / (4.5/1.33) = 1.77 > 1.5). Both readings share the skewed
-    // host — the division is only sound against cross-run baselines.
+    // a new query (no r1 baseline) whose fresh reading CONFIRMS the
+    // sequence cost (6.0 vs 4.5 — ratio 1.33 < 1.5)
     assert(witnessVerdict(seq = 6.0, iso = 6.1, fresh = Some(4.5),
-      r1Base = None, prevSec = None, hostRatio = 1.33) == "cost_confirmed")
-    // genuine intra-run noise still labels seq_noise, loaded or not
+      r1Base = None, prevSec = None) == "cost_confirmed")
+    // genuine intra-run noise labels seq_noise
     assert(witnessVerdict(seq = 9.0, iso = 2.0, fresh = Some(2.1),
-      r1Base = None, prevSec = None, hostRatio = 1.33) == "seq_noise")
-    // cross-run comparisons DO normalize: a 2.5x-vs-r1 reading whose
-    // fresh lands at 2.2 on a 1.2x-skewed host is cleared (2.2/1.2 =
-    // 1.83 <= 2), and confirmed when the host is quiet
+      r1Base = None, prevSec = None) == "seq_noise")
+    // against r1: a 2.5x sequence reading is confirmed when its trusted
+    // reading stays over 2x, and cleared when it lands under
     assert(witnessVerdict(seq = 2.5, iso = 2.4, fresh = Some(2.2),
-      r1Base = Some(1.0), prevSec = None, hostRatio = 1.2) == "cleared")
-    assert(witnessVerdict(seq = 2.5, iso = 2.4, fresh = Some(2.2),
-      r1Base = Some(1.0), prevSec = None, hostRatio = 1.0) == "confirmed")
-    // vs-prev flags adjudicate with the normalized trusted reading
-    // (r1-ok query, 1.6x vs prev: fresh 3.1 on a 1.6x-skewed host
-    // normalizes under the bar; on a quiet host it confirms)
+      r1Base = Some(1.0), prevSec = None) == "confirmed")
+    assert(witnessVerdict(seq = 2.5, iso = 2.4, fresh = Some(1.8),
+      r1Base = Some(1.0), prevSec = None) == "cleared")
+    // an r1-ok query at 1.6x vs prev: the trusted reading decides
     assert(witnessVerdict(seq = 3.2, iso = 3.1, fresh = Some(3.1),
-      r1Base = Some(2.0), prevSec = Some(2.0), hostRatio = 1.6) == "prev_noise")
-    assert(witnessVerdict(seq = 3.2, iso = 3.1, fresh = Some(3.1),
-      r1Base = Some(2.0), prevSec = Some(2.0), hostRatio = 1.0) == "prev_confirmed")
-    // a FASTER host never manufactures confirmations (ratio floored at 1)
-    assert(witnessVerdict(seq = 2.5, iso = 2.4, fresh = Some(2.2),
-      r1Base = Some(1.0), prevSec = None, hostRatio = 0.7) == "confirmed")
+      r1Base = Some(2.0), prevSec = Some(2.0)) == "prev_confirmed")
+    assert(witnessVerdict(seq = 3.2, iso = 3.1, fresh = Some(2.9),
+      r1Base = Some(2.0), prevSec = Some(2.0)) == "prev_noise")
   }
 
-  test("witness entries carry raw AND cpu-normalized vs_prev (r13 item 6)") {
+  test("witness entries carry the raw vs_prev_trusted ratio") {
     val j = graft.Bench.witnessEntryJson("q251_x", seq = 4.0, iso = 3.9,
-      isoSteal = 0.001, cc = 0.35, fresh = Some(3.6), prevSec = Some(2.0),
-      hostRatio = 1.2)
-    // trusted = fresh = 3.6; raw 3.6/2.0 = 1.8; normalized 3.6/1.2/2 = 1.5
+      isoSteal = 0.001, cc = 0.35, fresh = Some(3.6), prevSec = Some(2.0))
+    // trusted = fresh = 3.6; 3.6/2.0 = 1.8
     assert(j.contains(""""vs_prev_trusted":1.8"""), j)
-    assert(j.contains(""""vs_prev_cpu":1.5"""), j)
     // no prev baseline → no ratio fields, and the entry stays well-formed
     val j2 = graft.Bench.witnessEntryJson("q_new", 4.0, 3.9, 0.0, 0.35,
-      None, None, 1.2)
+      None, None)
     assert(!j2.contains("vs_prev") && j2.contains(""""seq":4.0"""), j2)
   }
 
@@ -317,25 +316,20 @@ class EdgeCaseSpec extends SparkSpec {
     // 3dp-rounded, so a 0.0295-steal run hostLoaded correctly called
     // quiet records run_avg 0.03 — it must not be retro-misclassified
     assert(!lineLoaded("""{"queries":{"q1":1.0},"steal":{"run_avg":0.03},"host_loaded":false}"""))
-    // a loaded line contaminates neither the vs_prev baseline nor the
-    // total-vs-history median: the quiet line (total 10) wins over the
-    // newer loaded line (total 20), so a 13-second run reads 1.3, not 0.65
+    // a loaded line never becomes the vs_prev baseline: the older
+    // quiet line wins over the newer loaded one
     val dir = java.nio.file.Files.createTempDirectory("bench_loaded").toFile
     dir.deleteOnExit()
     java.nio.file.Files.writeString(
       new java.io.File(dir, "BENCH_HISTORY.jsonl").toPath, Seq(
-        """{"metric":"total_median_sec","queries":{"q01_a":1.0,"q02_b":2.0,"q03_c":3.0,"q04_d":4.0},"sf":"/root/testdata/sf0.1","cpu_control":0.07,"host_loaded":false}""",
-        """{"metric":"total_median_sec","queries":{"q01_a":2.0,"q02_b":4.0,"q03_c":6.0,"q04_d":8.0},"sf":"/root/testdata/sf0.1","cpu_control":0.14,"host_loaded":true}""",
+        """{"metric":"total_median_sec","queries":{"q01_a":1.0,"q02_b":2.0,"q03_c":3.0,"q04_d":4.0},"sf":"/root/testdata/sf0.1","host_loaded":false}""",
+        """{"metric":"total_median_sec","queries":{"q01_a":2.0,"q02_b":4.0,"q03_c":6.0,"q04_d":8.0},"sf":"/root/testdata/sf0.1","host_loaded":true}""",
       ).mkString("\n") + "\n")
     val cur = Seq("q01_a" -> 2.0, "q02_b" -> 3.0, "q03_c" -> 4.0, "q04_d" -> 4.0)
     val names = cur.map(_._1).toSet
     val (label, prev) = graft.Bench.previousQueryTimes("/root/testdata/sf0.1", names, dir)
     assert(label.contains("BENCH_HISTORY.jsonl#1"), label.toString)
     assert(prev("q01_a") == 1.0)
-    val tvh = graft.Bench.totalVsHistoryRatio(cur, "/root/testdata/sf0.1", dir)
-    assert(tvh.exists(x => math.abs(x - 1.3) < 1e-9), tvh.toString)
-    val cpu = graft.Bench.cpuControlHistoryMedian("/root/testdata/sf0.1", names, dir)
-    assert(cpu.contains(0.07), cpu.toString)
   }
 
   test("witness cap: squeezed-out names are recorded, not dropped silently (r13 ADVICE low)") {
@@ -362,98 +356,31 @@ class EdgeCaseSpec extends SparkSpec {
     assert(picked.intersect(dropped).isEmpty)
   }
 
-  test("quiet-probe selection: streaming flags are eligible (r13 item 5)") {
-    // the r13 gap: the 29-query adjudication probe contained no
-    // streaming queries while q196/q325/q301 were ≥3x flags — the
-    // probe set is r1-shared ∪ every ≥3x-vs-prev flag, streaming
-    // included
-    val names = graft.Bench.quietProbeNames(
-      r1Shared = Set("q01_sum_first_col", "q06_join_revenue_by_nation"),
-      flaggedVsPrev = Map(
-        "q196_stream_ann_ingest" -> 3.5, // streaming, must be eligible
-        "q207_stream_sessions" -> 2.0, // under the 3x bar: not probed
-        "q139_phrase" -> 4.1))
-    assert(names.contains("q196_stream_ann_ingest"), names.toString)
-    assert(names.contains("q139_phrase"))
-    assert(names.contains("q01_sum_first_col"))
-    assert(!names.contains("q207_stream_sessions"))
-  }
-
-  test("total-vs-history loaded signal: shared-query ratio, partials skipped") {
-    import graft.Bench.totalVsHistoryRatio
-    val dir = java.nio.file.Files.createTempDirectory("bench_tvh").toFile
-    dir.deleteOnExit()
-    val hist = Seq(
-      // qualifying full run: shared total = 10
-      """{"metric":"total_median_sec","queries":{"q01_a":1.0,"q02_b":2.0,"q03_c":3.0,"q04_d":4.0},"sf":"/root/testdata/sf0.1","cpu_control":0.2}""",
-      // partial (covers <half the 4-query inventory): skipped
-      """{"metric":"total_median_sec","queries":{"q01_a":0.5},"sf":"/root/testdata/sf0.1"}""",
-      // cross-sf: skipped
-      """{"metric":"total_median_sec","queries":{"q01_a":1.0,"q02_b":1.0,"q03_c":1.0,"q04_d":1.0},"sf":"/root/testdata/sf0.01"}""",
-    ).mkString("\n") + "\n"
-    java.nio.file.Files.writeString(
-      new java.io.File(dir, "BENCH_HISTORY.jsonl").toPath, hist)
-    val loadedRun = Seq("q01_a" -> 2.0, "q02_b" -> 3.0,
-      "q03_c" -> 4.0, "q04_d" -> 4.0) // total 13 vs 10
-    val r = totalVsHistoryRatio(loadedRun, "/root/testdata/sf0.1", dir)
-    assert(r.exists(x => math.abs(x - 1.3) < 1e-9), r.toString)
-    // cpu-control history median parses from the same lines
-    val m = graft.Bench.cpuControlHistoryMedian(
-      "/root/testdata/sf0.1", Set("q01_a", "q02_b", "q03_c", "q04_d"), dir)
-    assert(m.contains(0.2), m.toString)
-    // no qualifying history → no signal, never a garbage ratio
-    val dir2 = java.nio.file.Files.createTempDirectory("bench_tvh2").toFile
-    dir2.deleteOnExit()
-    assert(totalVsHistoryRatio(loadedRun, "/root/testdata/sf0.1", dir2).isEmpty)
-  }
-
   test("history baselines require a similar run shape (round 14: probes vs full runs)") {
-    // the round-14 false flag: a quiet 52-query adjudication probe
-    // read total_vs_hist 1.24-1.68 against 341-query FULL-run lines
-    // (mid-sequence queries run on a warmed JVM; probe queries pay the
-    // cold share) and 0.975 against the like-shaped prior probe — an
-    // oversized line must be skipped, the like-shaped one used
-    import graft.Bench.totalVsHistoryRatio
+    // the round-14 false flag: a quiet 52-query adjudication probe read
+    // 1.24-1.68x against 341-query FULL-run lines (mid-sequence queries
+    // run on a warmed JVM; probe queries pay the cold share) and 0.975x
+    // against the like-shaped prior probe — an oversized line must be
+    // skipped, the like-shaped one used
     val dir = java.nio.file.Files.createTempDirectory("bench_shape").toFile
     dir.deleteOnExit()
-    // current run: a 4-query probe. History: a like-shaped probe
-    // (total 10 over shared) NEWER than nothing, plus a 12-query
-    // "full run" line whose shared times are warm-JVM fast (total 5)
+    // current run: a 4-query probe. History: a like-shaped probe, plus
+    // a NEWER 12-query "full run" line whose shared times are warm-JVM fast
     val fullLine =
       """{"metric":"total_median_sec","queries":{""" +
         (1 to 8).map(i => s""""q9${i}_other":1.0""").mkString(",") +
-        ""","q01_a":1.0,"q02_b":1.0,"q03_c":1.5,"q04_d":1.5},"sf":"/root/testdata/sf0.1","cpu_control":0.05}"""
+        ""","q01_a":1.0,"q02_b":1.0,"q03_c":1.5,"q04_d":1.5},"sf":"/root/testdata/sf0.1"}"""
     val probeLine =
-      """{"metric":"total_median_sec","queries":{"q01_a":2.0,"q02_b":2.0,"q03_c":3.0,"q04_d":3.0},"sf":"/root/testdata/sf0.1","cpu_control":0.07}"""
+      """{"metric":"total_median_sec","queries":{"q01_a":2.0,"q02_b":2.0,"q03_c":3.0,"q04_d":3.0},"sf":"/root/testdata/sf0.1"}"""
     java.nio.file.Files.writeString(
       new java.io.File(dir, "BENCH_HISTORY.jsonl").toPath,
       probeLine + "\n" + fullLine + "\n") // full line is NEWEST
     val cur = Seq("q01_a" -> 2.0, "q02_b" -> 2.0, "q03_c" -> 3.0, "q04_d" -> 3.0)
-    // vs the like-shaped probe: 10/10 = 1.0; vs the full line it would
-    // read 10/5 = 2.0 — the shape filter must pick the probe line
-    val r = totalVsHistoryRatio(cur, "/root/testdata/sf0.1", dir)
-    assert(r.exists(x => math.abs(x - 1.0) < 1e-9), r.toString)
-    // the per-query vs_prev baseline applies the same shape filter:
     // the OLDER like-shaped probe line wins over the newer full line
     val (label, prev) = graft.Bench.previousQueryTimes(
       "/root/testdata/sf0.1", cur.map(_._1).toSet, dir)
     assert(label.contains("BENCH_HISTORY.jsonl#1"), label.toString)
     assert(prev("q01_a") == 2.0, prev.toString)
-    // the cpu-control microbench is SHAPE-INDEPENDENT (round-14 review
-    // finding): gating it on run shape would disarm the normalizer
-    // exactly when the run shape changes — the median spans both lines
-    val cpu = graft.Bench.cpuControlHistoryMedian(
-      "/root/testdata/sf0.1", cur.map(_._1).toSet, dir)
-    assert(cpu.contains(0.07), cpu.toString) // median of [0.05, 0.07]
-    // and a dir whose ONLY cpu_control carrier is a full-run line
-    // still yields a baseline for a probe-shaped run
-    val dir2 = java.nio.file.Files.createTempDirectory("bench_shape2").toFile
-    dir2.deleteOnExit()
-    java.nio.file.Files.writeString(
-      new java.io.File(dir2, "BENCH_HISTORY.jsonl").toPath, fullLine + "\n")
-    val cpu2 = graft.Bench.cpuControlHistoryMedian(
-      "/root/testdata/sf0.1", cur.map(_._1).toSet, dir2)
-    assert(cpu2.contains(0.05), cpu2.toString)
   }
 
   test("wrapper fallback: records/ scanned, empty wrappers skipped (round 14)") {
